@@ -4,11 +4,12 @@ import graft.canon.ConnectedComponents
 import graft.core._
 import graft.ingest.DocValidator
 import graft.nlp.{AhoCorasick, MentionDetector, SentenceSplitter, Tokenizer}
+import graft.nlp.Tokenizer.Token
 import graft.pairs.PairGenerator
 import graft.score.{RelationScorer, WindowEncoder}
 import graft.triggers.TriggerDetector
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction pipeline (SURVEY.md §3.1 re-expressed
@@ -37,56 +38,80 @@ object KgPipeline {
                     scoredAll: Dataset[ScoredPair], unfitted: DataFrame,
                     nodes: DataFrame, quarantine: Dataset[QuarantineRow])
 
-  /** The fused narrow pass: docs → encoded candidate pairs.
-    * Exposed separately so tests/queries can observe the intermediate.
-    * `strategy` selects the representation (MASK_EVERYTHING default — the
-    * shipped best model's; MARK for typed boundary markers), dispatched
-    * per doc with no change to the plan shape. */
+  /** The one per-document extraction, in the reference's order
+    * (tf.py:293-434): sentence split → dictionary NER + linking →
+    * candidate pairs → tokenize → window fit → score. No other code knows
+    * this order; every KG pass below is a projection of it. Its parts are
+    * lazy, so a projection pays only for what it reads: mention rows never
+    * generate pairs, and a doc without pairs is never tokenized. */
+  final class DocExtraction(doc: Doc, ac: AhoCorasick, config: TaskConfig) {
+    lazy val mentions: Seq[Mention] =
+      MentionDetector.detect(doc, ac, SentenceSplitter.split(doc))
+    lazy val pairs: Seq[CandidatePair] = PairGenerator.forDoc(mentions, config)
+    lazy val tokens: IndexedSeq[Token] = Tokenizer.tokenize(SentenceSplitter.docText(doc))
+
+    /** F5 window fit, one geometry per pair: the fitted pairs, and the
+      * unfitted ones with their token distance (the FN side output). */
+    lazy val (fitted, unfitted) = {
+      val in = Vector.newBuilder[CandidatePair]
+      val out = Vector.newBuilder[(CandidatePair, Int)]
+      pairs.foreach { p =>
+        val (_, _, _, _, dist, fits) = WindowEncoder.geometry(tokens, p, config.maxSeqLen)
+        if (fits) in += p else out += ((p, dist))
+      }
+      (in.result(), out.result())
+    }
+
+    /** Encoded windows of every pair under `strategy` (MASK_EVERYTHING or
+      * MARK), dispatched per doc with no change to the plan shape. */
+    def encoded(strategy: WindowEncoder.RepresentationStrategy): Seq[EncodedPair] =
+      if (pairs.isEmpty) Nil
+      else WindowEncoder.encodeDocWith(strategy)(tokens, pairs, mentions, config.maxSeqLen)
+
+    /** Scores of `candidates` (every pair by default: the scorer skips
+      * unfitted ones itself). The encoded window is DROPPED from negative
+      * rows before they cross the Dataset row boundary: windows are only
+      * consumed by trigger detection, which is gated on positives (F6).
+      * Without this, every candidate pair would serialize a ~128-element
+      * string array into Tungsten rows — at 10⁶ pairs per million docs
+      * that turns the narrow pass from CPU-bound extraction into
+      * allocation/GC churn (measured 2-3× wall-clock on the bench box). */
+    def scored(scorer: RelationScorer,
+               candidates: Seq[CandidatePair] = pairs): Iterator[ScoredPair] =
+      if (candidates.isEmpty) Iterator.empty
+      else scorer.scoreDoc(tokens, mentions, candidates, config.maxSeqLen).map { sp =>
+        if (isPositive(sp)) sp else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
+      }
+  }
+
+  /** F7 argmax decode: pos wins over neg. */
+  def isPositive(sp: ScoredPair): Boolean = sp.score_pos > sp.score_neg
+
+  /** A narrow per-doc pass: `project` of each doc's extraction. */
+  private def perDoc[T: Encoder](docs: Dataset[Doc], dict: Broadcast[AhoCorasick],
+                                 config: TaskConfig)
+                                (project: DocExtraction => IterableOnce[T]): Dataset[T] =
+    docs.flatMap(doc => project(new DocExtraction(doc, dict.value, config)))
+
+  /** Docs → encoded candidate pairs under `strategy` (MASK_EVERYTHING
+    * default — the shipped best model's; MARK for typed boundary markers).
+    * Exposed so tests/queries can observe the intermediate. */
   def encodeCandidates(docs: Dataset[Doc], dict: Broadcast[AhoCorasick],
                        config: TaskConfig,
                        strategy: WindowEncoder.RepresentationStrategy =
                          WindowEncoder.MaskEverything)
                       (implicit spark: SparkSession): Dataset[EncodedPair] = {
     import spark.implicits._
-    docs.flatMap { doc =>
-      val sentences = SentenceSplitter.split(doc)
-      val mentions = MentionDetector.detect(doc, dict.value, sentences)
-      val pairs = PairGenerator.forDoc(mentions, config)
-      if (pairs.isEmpty) Nil
-      else {
-        val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
-        WindowEncoder.encodeDocWith(strategy)(tokens, pairs, mentions, config.maxSeqLen)
-      }
-    }
+    perDoc(docs, dict, config)(_.encoded(strategy))
   }
 
-  /** The fused extract→encode→score pass. Scoring runs inside the per-doc
-    * flatMap (the scorer trait's batch contract still holds — it receives
-    * the doc's pair iterator), and the encoded token window is DROPPED from
-    * negative rows before they cross the Dataset row boundary: windows are
-    * only consumed downstream by trigger detection, which is gated on
-    * positives (F6). Without this, every candidate pair would serialize a
-    * ~128-element string array into Tungsten rows — at 10⁶ pairs per
-    * million docs that converts the narrow pass from CPU-bound extraction
-    * into allocation/GC churn (measured 2-3× wall-clock on the bench box).
-    */
+  /** The fused extract→encode→score pass: docs → scored pairs, windows
+    * only on positives. */
   def scoreCandidates(docs: Dataset[Doc], dict: Broadcast[AhoCorasick],
                       scorer: RelationScorer, config: TaskConfig)
                      (implicit spark: SparkSession): Dataset[ScoredPair] = {
     import spark.implicits._
-    docs.flatMap { doc =>
-      val sentences = SentenceSplitter.split(doc)
-      val mentions = MentionDetector.detect(doc, dict.value, sentences)
-      val pairs = PairGenerator.forDoc(mentions, config)
-      if (pairs.isEmpty) Iterator.empty
-      else {
-        val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
-        scorer.scoreDoc(tokens, mentions, pairs, config.maxSeqLen).map { sp =>
-          if (sp.score_pos > sp.score_neg) sp
-          else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
-        }
-      }
-    }
+    perDoc(docs, dict, config)(_.scored(scorer))
   }
 
   /** The SINGLE fused extraction pass: one scan over the corpus emits a
@@ -100,31 +125,33 @@ object KgPipeline {
                  scorer: RelationScorer, config: TaskConfig)
                 (implicit spark: SparkSession): Dataset[PassRow] = {
     import spark.implicits._
-    docs.flatMap { doc =>
-      val sentences = SentenceSplitter.split(doc)
-      val mentions = MentionDetector.detect(doc, dict.value, sentences)
-      val mentionRows = mentions.iterator.map(m =>
-        PassRow(2, null, doc.doc_id, null, null, null, null, 0, 0, m.norm_id, m.text))
-      val pairs = PairGenerator.forDoc(mentions, config)
-      if (pairs.isEmpty) mentionRows
-      else {
-        val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
-        val (fitted, unfitted) = pairs.partition(p =>
-          WindowEncoder.geometry(tokens, p, config.maxSeqLen)._6)
-        val unfittedRows = unfitted.iterator.map { p =>
-          val dist = WindowEncoder.geometry(tokens, p, config.maxSeqLen)._5
-          PassRow(1, null, p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm,
-            p.sent_dist, dist, null, null)
-        }
-        val scoredRows = scorer.scoreDoc(tokens, mentions, fitted, config.maxSeqLen)
-          .map { sp =>
-            val lean = if (sp.score_pos > sp.score_neg) sp
-            else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
-            PassRow(0, lean, doc.doc_id, null, null, null, null, 0, 0, null, null)
-          }
-        mentionRows ++ unfittedRows ++ scoredRows
-      }
+    perDoc(docs, dict, config) { x =>
+      x.mentions.iterator.map(m =>
+        PassRow(2, null, m.doc_id, null, null, null, null, 0, 0, m.norm_id, m.text)) ++
+        x.unfitted.iterator.map { case (p, dist) =>
+          PassRow(1, null, p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, dist, null, null)
+        } ++
+        x.scored(scorer, x.fitted).map(sp =>
+          PassRow(0, sp, sp.doc_id, null, null, null, null, 0, 0, null, null))
     }
+  }
+
+  /** Argmax-positive scored rows as canonical triples: both mention norms
+    * mapped through `canonMap`, the unordered pair written subj ≤ obj. The
+    * one triple builder — batch `run` and `StreamingIngest.triples` (a
+    * stream-static join, supported in append mode) both use it. */
+  def canonicalTriples(positives: Dataset[ScoredPair], canonMap: DataFrame)
+                      (implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
+    ConnectedComponents.withCanonical(
+      ConnectedComponents.withCanonical(positives.toDF(), "e1_norm", canonMap, "subj"),
+      "e2_norm", canonMap, "obj")
+      .select($"doc_id",
+        least($"subj", $"obj").as("subj"),
+        lit("Complex_formation").as("pred"),
+        greatest($"subj", $"obj").as("obj"),
+        $"e1", $"e2", $"score_neg", $"score_pos")
+      .as[Triple]
   }
 
   /** Full prediction pipeline. `equivEdges` is the (small) global
@@ -162,25 +189,12 @@ object KgPipeline {
           pass.filter((r: PassRow) => r.kind == 2).toDF()
             .select($"norm_id", $"surface"))
       } else {
-        val unf = good.flatMap { doc =>
-          val mentions = MentionDetector.detect(doc, dict.value, SentenceSplitter.split(doc))
-          val pairs = PairGenerator.forDoc(mentions, config)
-          if (pairs.isEmpty) Nil
-          else {
-            val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
-            pairs.flatMap { p =>
-              val (_, _, _, _, dist, fitted) =
-                WindowEncoder.geometry(tokens, p, config.maxSeqLen)
-              if (fitted) None
-              else Some((p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, dist))
-            }
-          }
-        }.toDF("doc_id", "e1", "e2", "e1_norm", "e2_norm", "sent_dist", "tokenDistance")
-        val norms = good.flatMap { doc =>
-          MentionDetector.detect(doc, dict.value, SentenceSplitter.split(doc))
-            .map(m => (m.norm_id, m.text))
-        }.toDF("norm_id", "surface")
-        (scoreCandidates(good, dict, scorer, config), unf, norms)
+        (scoreCandidates(good, dict, scorer, config),
+          perDoc(good, dict, config)(_.unfitted.map { case (p, dist) =>
+            (p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, dist)
+          }).toDF("doc_id", "e1", "e2", "e1_norm", "e2_norm", "sent_dist", "tokenDistance"),
+          perDoc(good, dict, config)(_.mentions.map(m => (m.norm_id, m.text)))
+            .toDF("norm_id", "surface"))
       }
 
     // canonical map from the global equivalence edges (J6); tiny vs corpus
@@ -189,17 +203,8 @@ object KgPipeline {
     // F7: only argmax-positive rows materialize as triples; all scored rows
     // remain available (the reference writes every row to TSV, positives
     // additionally to .ann — tf.py:405-407)
-    val positives = scored.filter((s: ScoredPair) => s.score_pos > s.score_neg)
-    val canonical = ConnectedComponents.withCanonical(
-      ConnectedComponents.withCanonical(positives.toDF(), "e1_norm", canonMap, "subj"),
-      "e2_norm", canonMap, "obj")
-    val triples = canonical
-      .select($"doc_id",
-        least($"subj", $"obj").as("subj"),
-        lit("Complex_formation").as("pred"),
-        greatest($"subj", $"obj").as("obj"),
-        $"e1", $"e2", $"score_neg", $"score_pos")
-      .as[Triple]
+    val positives = scored.filter(isPositive _)
+    val triples = canonicalTriples(positives, canonMap)
 
     val triggers = positives.flatMap(TriggerDetector.triggersFor _)
 

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions.col
   *
   * `dict` is either a parquet path with (surface, norm_id, tag) rows and an
   * optional sibling `<dict>_equiv` table of (src, dst) edges, or
-  * `synthetic:<nEntities>` for the seeded synthetic dictionary.
+  * `synthetic:<nEntities>` for the seeded synthetic dictionary. An absent
+  * `<dict>_equiv` means no canonicalization; one that is present but
+  * unreadable, or lacks the (src, dst) columns, fails the job.
   *
   * Writes (all Iceberg-shaped bucketed parquet with lineage — re-running
   * after a crash resumes exactly at the incomplete buckets):
@@ -35,9 +37,10 @@ object RunJob {
         (CorpusGen.dictionary(p), spark.createDataset(CorpusGen.equivEdges(p)))
       } else {
         val d = spark.read.parquet(dictSpec).as[DictEntry].collect().toSeq
-        val e = try spark.read.parquet(s"${dictSpec}_equiv").as[EquivEdge]
-        catch { case _: Throwable => spark.emptyDataset[EquivEdge] }
-        (d, e)
+        val equiv = new org.apache.hadoop.fs.Path(s"${dictSpec}_equiv")
+        val present = equiv.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(equiv)
+        (d, if (present) spark.read.parquet(equiv.toString).as[EquivEdge]
+            else spark.emptyDataset[EquivEdge])
       }
 
     // all three output families are written — persist the fused pass so

@@ -20,10 +20,7 @@ object InternalMetrics {
   case class ClassMetrics(label: String, tp: Long, fp: Long, fn: Long,
                           precision: Double, recall: Double, f1: Double)
   case class Report(confusion: Map[(String, String), Long],
-                    perClass: Seq[ClassMetrics], accuracy: Double) {
-    def positiveF1(positiveLabel: String): Double =
-      perClass.find(_.label == positiveLabel).map(_.f1).getOrElse(0.0)
-  }
+                    perClass: Seq[ClassMetrics], accuracy: Double)
 
   /** @param scored   (doc_id, e1, e2, gold_label, pred_label) for every
     *                 pair that reached the classifier

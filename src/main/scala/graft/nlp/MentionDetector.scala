@@ -2,7 +2,7 @@ package graft.nlp
 
 import graft.core.{DictEntry, Doc, Mention, Sentence}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Mention detection + entity linking (SURVEY.md §7.1 `nlp` module).
   *
@@ -49,15 +49,6 @@ object MentionDetector extends Serializable {
     hits.zipWithIndex.map { case (m, i) =>
       Mention(doc.doc_id, s"T${i + 1}", m.tag, m.bgn, m.end, m.surface,
         m.norm_id, sentOf(m.bgn))
-    }
-  }
-
-  /** Dataset-level stage: docs → mentions, with the automaton broadcast. */
-  def detectAll(docs: Dataset[Doc], dict: Broadcast[AhoCorasick])
-               (implicit spark: SparkSession): Dataset[Mention] = {
-    import spark.implicits._
-    docs.flatMap { doc =>
-      detect(doc, dict.value, SentenceSplitter.split(doc))
     }
   }
 

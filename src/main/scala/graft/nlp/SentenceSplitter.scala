@@ -68,10 +68,12 @@ object SentenceSplitter extends Serializable {
 
   /** Reconstructed text-only document content placed at absolute offsets
     * (media spans are opaque; they occupy their `offset` position but carry
-    * no sentence text). Returns (fullTextBuffer, maxOffset). Used by the
-    * tokenizer and window encoder so char offsets agree across stages. */
+    * no sentence text). Used by the tokenizer and window encoder so char
+    * offsets agree across stages. A media span may carry null text
+    * (DocValidator accepts it): it counts as length 0, as in the validator. */
   def docText(doc: Doc): String = {
-    val end = doc.spans.lastOption.map(s => s.offset + s.text.length).getOrElse(0)
+    val end = doc.spans.lastOption
+      .map(s => s.offset + (if (s.text == null) 0 else s.text.length)).getOrElse(0)
     val sb = new java.lang.StringBuilder()
     sb.setLength(end)
     var i = 0

@@ -351,14 +351,6 @@ object SimSearch {
       .limit(k)
   }
 
-  /** Embedding near-duplicate groups on a quantized grid: vectors whose
-    * floor(x*g) cells all agree are near-dups — exact group-by, no O(n²). */
-  def gridNearDupGroups(emb: DataFrame, gridScale: Int = 2): DataFrame =
-    emb.groupBy(
-        concat_ws(",", transform(col("embedding"),
-          x => floor(x * gridScale).cast("long").cast("string"))).as("cell"))
-      .agg(count(lit(1)).as("n_members"), min(col("vec_id")).as("keep_id"))
-
   /** Exact cosine near-dup PAIRS above a threshold, blocked by LSH bucket
     * so the self-join is per-bucket only (the embedding analog of
     * MinHash-LSH banding). */

@@ -1,9 +1,6 @@
 package graft.pairs
 
 import graft.core._
-import graft.nlp.{MentionDetector, SentenceSplitter, AhoCorasick}
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Candidate-pair generation (SURVEY.md §2.3 J3/J4, §2.2 F1-F4).
   *
@@ -79,16 +76,5 @@ object PairGenerator extends Serializable {
         if x != y
       } yield if (x < y) (x, y) else (y, x)
     }.distinct
-  }
-
-  /** Dataset-level stage (used by tests and exploratory queries; the
-    * pipeline hot path uses the fused per-doc pass in KgPipeline). */
-  def generate(docs: Dataset[Doc], dict: Broadcast[AhoCorasick],
-               config: TaskConfig)(implicit spark: SparkSession): Dataset[CandidatePair] = {
-    import spark.implicits._
-    docs.flatMap { doc =>
-      val sents = SentenceSplitter.split(doc)
-      forDoc(MentionDetector.detect(doc, dict.value, sents), config)
-    }
   }
 }

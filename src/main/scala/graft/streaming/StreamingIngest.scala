@@ -1,6 +1,8 @@
 package graft.streaming
 
+import graft.KgPipeline
 import graft.core._
+import graft.ingest.DocValidator
 import graft.nlp.AhoCorasick
 import graft.score.RelationScorer
 import org.apache.spark.broadcast.Broadcast
@@ -23,13 +25,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingIngest {
 
-  /** Streaming triples from a documents directory. Canonicalization joins
-    * the (static, broadcast) canonical map against the stream — a
-    * stream-static join, supported in append mode. */
+  /** Streaming triples from a documents directory: the batch validity
+    * filter, then the batch extraction and triple builder. Invalid docs
+    * are dropped, as the batch path quarantines them, instead of failing
+    * the query. Canonicalization joins the (static, broadcast) canonical
+    * map against the stream — a stream-static join, supported in append
+    * mode. */
   def triples(spark: SparkSession, docsDir: String,
               dict: Broadcast[AhoCorasick], scorer: RelationScorer,
               canonMap: DataFrame,
               config: TaskConfig = TaskConfig.complexTome): DataFrame = {
+    implicit val s: SparkSession = spark
     import spark.implicits._
     val docSchema = implicitly[org.apache.spark.sql.Encoder[Doc]].schema
     val docs: Dataset[Doc] = spark.readStream
@@ -37,17 +43,8 @@ object StreamingIngest {
       .option("maxFilesPerTrigger", "64") // bound micro-batch size
       .parquet(docsDir)
       .as[Doc]
-    val scored = graft.KgPipeline.scoreCandidates(docs, dict, scorer, config)(spark)
-    val positives = scored.filter((s: ScoredPair) => s.score_pos > s.score_neg)
-    val canon = graft.canon.ConnectedComponents.withCanonical(
-      graft.canon.ConnectedComponents.withCanonical(
-        positives.toDF(), "e1_norm", canonMap, "subj"),
-      "e2_norm", canonMap, "obj")
-    canon.select($"doc_id",
-      least($"subj", $"obj").as("subj"),
-      lit("Complex_formation").as("pred"),
-      greatest($"subj", $"obj").as("obj"),
-      $"e1", $"e2", $"score_neg", $"score_pos")
+    val scored = KgPipeline.scoreCandidates(DocValidator.split(docs)._1, dict, scorer, config)
+    KgPipeline.canonicalTriples(scored.filter(KgPipeline.isPositive _), canonMap).toDF()
   }
 
   /** Stateful streaming dedup: emit each document the FIRST time its text

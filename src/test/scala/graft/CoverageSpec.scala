@@ -173,6 +173,10 @@ class CoverageSpec extends AnyFunSuite {
     val docsDir = s"$tmp/docs"
     CorpusGen.generate(spark, p).map(_.doc)
       .repartition(4).write.parquet(docsDir)
+    // one more file holding a malformed doc (a text span with null text):
+    // the stream must drop it as the batch path quarantines it, not fail
+    Seq(Doc("bad", Seq(Span("text", null, "", 0)))).toDS()
+      .write.mode("append").parquet(docsDir)
 
     val dict = graft.nlp.MentionDetector.broadcastDict(spark, CorpusGen.dictionary(p))
     val canonMap = graft.canon.ConnectedComponents.canonicalizeAuto(
@@ -185,9 +189,11 @@ class CoverageSpec extends AnyFunSuite {
     val streamed = spark.read.parquet(s"$tmp/sink")
       .select("doc_id", "subj", "obj").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    val batch = KgPipeline.run(CorpusGen.docs(CorpusGen.generate(spark, p)),
+    val batchOut = KgPipeline.run(spark.read.parquet(docsDir).as[Doc],
       CorpusGen.dictionary(p), spark.createDataset(CorpusGen.equivEdges(p)),
-      LexiconScorer.default).triples.collect()
+      LexiconScorer.default)
+    assert(batchOut.quarantine.collect().map(_.doc_id).toSeq == Seq("bad"))
+    val batch = batchOut.triples.collect()
       .map(t => (t.doc_id, t.subj, t.obj)).toSet
     assert(streamed == batch, "stream/batch parity")
     assert(streamed.nonEmpty)

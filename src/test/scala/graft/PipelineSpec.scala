@@ -3,7 +3,6 @@ package graft
 import graft.core._
 import graft.eval.Evalsorel
 import graft.nlp.MentionDetector
-import graft.pairs.PairGenerator
 import graft.score.{LexiconScorer, WindowEncoder}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,14 +43,50 @@ class PipelineSpec extends AnyFunSuite {
 
   test("pair generation: each unordered valid pair at most once, pruned at k") {
     val dict = MentionDetector.broadcastDict(spark, CorpusGen.dictionary(params))
-    val pairs = PairGenerator
-      .generate(CorpusGen.docs(gen), dict, TaskConfig.complexTome)
+    val pairs = CorpusGen.docs(gen).flatMap(d =>
+      new KgPipeline.DocExtraction(d, dict.value, TaskConfig.complexTome).pairs)
       .collect()
     val keys = pairs.map(p => (p.doc_id, p.e1, p.e2))
     assert(keys.distinct.length == keys.length, "duplicate candidate pair")
     assert(pairs.forall(p => p.sent_dist < 7), "distance prune violated")
     assert(pairs.forall(p => p.e1 != p.e2))
     assert(pairs.forall(p => p.e1_bgn <= p.e2_bgn), "e1 must be first-occurring")
+  }
+
+  test("persistPass strategies agree: same outputs as multisets") {
+    val p = params.copy(nDocs = 200)
+    val g = CorpusGen.generate(spark, p).cache()
+    def outputs(persist: Boolean): Seq[Map[Any, Int]] = {
+      val o = KgPipeline.run(CorpusGen.docs(g), CorpusGen.dictionary(p),
+        spark.createDataset(CorpusGen.equivEdges(p)), LexiconScorer.default,
+        persistPass = persist)
+      Seq[Seq[Any]](o.triples.collect().toSeq, o.triggers.collect().toSeq,
+        o.unfitted.collect().toSeq, o.nodes.collect().toSeq, o.scoredAll.collect().toSeq)
+        .map(_.groupBy(identity).map { case (k, v) => k -> v.length })
+    }
+    val (cached, lazily) = (outputs(persist = true), outputs(persist = false))
+    Seq("triples", "triggers", "unfitted", "nodes", "scoredAll").zipWithIndex.foreach {
+      case (name, i) =>
+        assert(cached(i).nonEmpty, s"$name is empty: the comparison would be vacuous")
+        val (onlyCached, onlyLazy) =
+          (cached(i).toSet diff lazily(i).toSet, lazily(i).toSet diff cached(i).toSet)
+        assert(onlyCached.isEmpty && onlyLazy.isEmpty, s"$name differs between " +
+          s"persistPass = true ${onlyCached.take(3)} and false ${onlyLazy.take(3)}")
+    }
+    g.unpersist()
+  }
+
+  test("a valid doc ending in a null-text media span runs through the pipeline") {
+    // DocValidator accepts a media span with null text; docText must size
+    // the buffer from it without dereferencing the null
+    val doc = Doc("m1", Seq(Span("text", "<A> binds <B>.", "", 0),
+      Span("media", null, "m://1", 40)))
+    val dict = Seq(DictEntry("<A>", "nA", "Protein"), DictEntry("<B>", "nB", "Protein"))
+    val out = KgPipeline.run(spark.createDataset(Seq(doc)), dict,
+      spark.emptyDataset[EquivEdge], LexiconScorer.default)
+    assert(out.quarantine.count() == 0)
+    assert(out.scoredAll.count() == 1, "the one candidate pair must be scored")
+    assert(out.triples.collect().map(t => (t.subj, t.obj)).toSeq == Seq(("nA", "nB")))
   }
 
   test("window-fit predicate routes over-length pairs to the FN side output") {

@@ -37,6 +37,43 @@ class RunJobSpec extends AnyFunSuite {
       .lineageRowCount(spark, s"$tmp/out/triples") == fromData)
   }
 
+  test("RunJob: an absent <dict>_equiv runs uncanonicalized; a malformed one fails") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val tmp = Files.createTempDirectory("graft_equiv").toString
+    val p = core.CorpusGen.Params(nDocs = 80)
+    val docs = core.CorpusGen.generate(spark, p).map(_.doc)
+    docs.write.parquet(s"$tmp/docs")
+    val dict = core.CorpusGen.dictionary(p)
+    dict.toDS().write.parquet(s"$tmp/dict")
+
+    // absent: the job runs, and its triples are the raw (uncanonicalized) ones
+    val c = RunJob.run(spark, s"$tmp/docs", s"$tmp/dict", s"$tmp/out", 4)
+    assert(c("triples") > 0)
+    def keys(ts: org.apache.spark.sql.DataFrame) =
+      ts.select("doc_id", "subj", "obj").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val written = keys(materialize.GraphMaterializer.readTable(spark, s"$tmp/out/triples"))
+    def direct(edges: Seq[core.EquivEdge]) =
+      keys(KgPipeline.run(docs, dict, edges.toDS(), score.LexiconScorer.default).triples.toDF())
+    assert(written == direct(Nil))
+    assert(written != direct(core.CorpusGen.equivEdges(p)),
+      "canonicalization must change some triple, or the check above shows nothing")
+
+    // present but with the wrong columns, or corrupt: the job fails
+    // instead of silently switching canonicalization off
+    dict.toDS().write.parquet(s"$tmp/dict2")
+    Seq(("a", "b")).toDF("from", "to").write.parquet(s"$tmp/dict2_equiv")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      RunJob.run(spark, s"$tmp/docs", s"$tmp/dict2", s"$tmp/out2", 4)
+    }
+    dict.toDS().write.parquet(s"$tmp/dict3")
+    Files.createDirectories(java.nio.file.Paths.get(s"$tmp/dict3_equiv"))
+    Files.writeString(java.nio.file.Paths.get(s"$tmp/dict3_equiv/part-0.parquet"), "not parquet")
+    intercept[Exception] {
+      RunJob.run(spark, s"$tmp/docs", s"$tmp/dict3", s"$tmp/out3", 4)
+    }
+  }
+
   test("CurationJob materializes keep-list + packed resumably; re-run no-op") {
     val tmp = Files.createTempDirectory("graft_cjob").toString
     val docsPath = "/root/testdata/sf0.001/documents.parquet"
