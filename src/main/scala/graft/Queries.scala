@@ -549,18 +549,15 @@ object Queries {
         expr("(n_ab * n_total * 1000000) div (n_a * n_b)").as("lift_ppm"))
   }
 
-  /** The USER CO-OCCURRENCE graph off the events stream: users active in
-    * the same minute are linked (distinct (user, minute) pairs self-joined
-    * on the minute bucket — the bin-join pattern, so the quadratic step is
-    * bounded per bucket, never global). Minutes come off `unix_micros div
-    * 60e6` — exact integer bucketing that DuckDB mirrors as `epoch_us //
-    * 60000000`. This is the larger, sparser graph (150 nodes / ~1k edges
-    * at sf0.01 vs the 5-entity KG) the peel/link-predict/PPR entries run
-    * on, the behavioral-graph side of a curation stack (bot rings and
-    * coordinated accounts surface as dense cores and high link-prediction
-    * scores). */
-  def userGraphEdges(s: SparkSession, dir: String,
-                     spread: Boolean = false): DataFrame = {
+  /** The USER CONTACTS off the events stream, the one join every user-graph
+    * edge table projects: distinct (user, minute) pairs self-joined on the
+    * minute bucket (the bin-join pattern — the quadratic step is bounded per
+    * bucket), `unix_micros div 60e6` mirrored by DuckDB's `epoch_us //
+    * 60000000`. Its columns stay qualified and unaliased ([[contactSrc]] <
+    * [[contactDst]], [[contactBkt]]): an alias here would add a projection
+    * under the weighted builder's aggregation and change its plan. */
+  private def userContacts(s: SparkSession, dir: String,
+                           spread: Boolean = false): DataFrame = {
     // The bucket self-join's cost is its per-bucket quadratic fan-OUT, not
     // its input bytes: AQE's byte-based coalescing shrinks the tiny
     // (user, minute) exchange to 1-2 partitions and the 50×-amplifying
@@ -579,11 +576,23 @@ object Queries {
     val b = if (spread)
       b0.repartition(s.sparkContext.defaultParallelism, col("bkt"))
     else b0
-    b.as("x").join(b.as("y"),
-        col("x.bkt") === col("y.bkt") && col("x.user_id") < col("y.user_id"))
-      .select(col("x.user_id").as("src"), col("y.user_id").as("dst"))
-      .distinct()
+    b.as("x").join(b.as("y"), col("x.bkt") === col("y.bkt") &&
+      contactSrc < contactDst)
   }
+
+  private val (contactSrc, contactDst, contactBkt) =
+    (col("x.user_id"), col("y.user_id"), col("x.bkt"))
+
+  /** The USER CO-OCCURRENCE graph: users active in the same minute are
+    * linked — the distinct (src, dst) pairs of [[userContacts]]. This is
+    * the larger, sparser graph (150 nodes / ~1k edges at sf0.01 vs the
+    * 5-entity KG) the peel/link-predict/PPR entries run on, the
+    * behavioral-graph side of a curation stack (bot rings and coordinated
+    * accounts surface as dense cores and high link-prediction scores). */
+  def userGraphEdges(s: SparkSession, dir: String,
+                     spread: Boolean = false): DataFrame =
+    userContacts(s, dir, spread)
+      .select(contactSrc.as("src"), contactDst.as("dst")).distinct()
 
   /** The user graph with EDGE WEIGHTS: co-occurrence strength n_min
     * (distinct shared minutes) inverted into an integer distance
@@ -591,13 +600,8 @@ object Queries {
     * BOTH directions (the symmetric weighted edge list
     * [[graft.graph.GraphOps.ssspBounded]] consumes). */
   def userWeightedEdges(s: SparkSession, dir: String): DataFrame = {
-    val b = table(s, dir, "events")
-      .select(col("user_id"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) div 60000000").as("bkt"))
-      .distinct()
-    val wp = b.as("x").join(b.as("y"),
-        col("x.bkt") === col("y.bkt") && col("x.user_id") < col("y.user_id"))
-      .groupBy(col("x.user_id").as("src"), col("y.user_id").as("dst"))
+    val wp = userContacts(s, dir)
+      .groupBy(contactSrc.as("src"), contactDst.as("dst"))
       .agg(count(lit(1)).as("n_min"))
       .select(col("src"), col("dst"), expr("1000000 div n_min").as("w"))
     wp.unionByName(
@@ -620,14 +624,8 @@ object Queries {
     * minute, both directions — the time-respecting contact list
     * [[userTemporalReach]] propagates over. */
   def userTemporalEdges(s: SparkSession, dir: String): DataFrame = {
-    val b = table(s, dir, "events")
-      .select(col("user_id"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) div 60000000").as("bkt"))
-      .distinct()
-    val p = b.as("x").join(b.as("y"),
-        col("x.bkt") === col("y.bkt") && col("x.user_id") < col("y.user_id"))
-      .select(col("x.user_id").as("src"), col("y.user_id").as("dst"),
-        col("x.bkt").as("t"))
+    val p = userContacts(s, dir)
+      .select(contactSrc.as("src"), contactDst.as("dst"), contactBkt.as("t"))
     p.unionByName(
       p.select(col("dst").as("src"), col("src").as("dst"), col("t")))
   }

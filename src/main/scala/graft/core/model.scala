@@ -91,6 +91,8 @@ case class EquivEdge(src: String, dst: String)
 
 /** Gold fixtures (FIXTURES.md §3-4). */
 case class GoldRelation(doc_id: String, rel_type: String, arg1_norm: String, arg2_norm: String)
+/** `bgn`/`end`: UTF-16 offsets into the doc text, like every engine span
+  * ([[graft.ingest.BratParser]] converts brat's codepoints); first span. */
 case class GoldMention(doc_id: String, t_id: String, tag: String,
                        bgn: Int, end: Int, text: String, norm_id: String)
 

@@ -31,6 +31,23 @@ object GraphOps {
     e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
   }
 
+  /** The simple undirected graph of an edge list: [[symmetrize]] without
+    * self-loops — the view every degree-, neighbor- and triangle-based
+    * operator reads. */
+  def undirected(edges: DataFrame): DataFrame =
+    symmetrize(edges).filter(col("src") =!= col("dst"))
+
+  /** The one adjacency policy of the iterative operators: `edges` (in
+    * whatever shape the caller's loop reads — symmetrized, degree-joined,
+    * weighted, temporal or directed) hash-partitioned on src ONCE and
+    * persisted, so every round's join shuffles only the small side; the
+    * table is released when `body` returns or throws. */
+  private def withAdjacency[T](edges: DataFrame)(body: DataFrame => T): T = {
+    val adj = edges.repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try body(adj) finally adj.unpersist()
+  }
+
   /** Per-node structural rollup of an edge-rollup table
     * (subj, obj, n_docs): undirected degree (distinct neighbors — robust
     * to multi-predicate rollups where (subj, obj) repeats per pred) and
@@ -68,7 +85,7 @@ object GraphOps {
     * @return DataFrame(node, n_tri) covering every node of the
     *         symmetrized edge list (0 for triangle-free nodes). */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
+    val sym = undirected(edges)
     val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     // orient low→high by (degree, id); ties break on the id so the order
     // is total and the oriented edge set is exactly half the symmetric one
@@ -122,7 +139,7 @@ object GraphOps {
   def neighborJaccard(edges: DataFrame, minPermille: Int = 0): DataFrame = {
     require(minPermille >= 0 && minPermille <= 1000,
       s"minPermille must be in [0, 1000], got $minPermille")
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
+    val sym = undirected(edges)
     val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
     val wedges = sym.select(col("src").as("node_a"), col("dst").as("nb"))
       .join(sym.select(col("src").as("node_b"), col("dst").as("nb")), Seq("nb"))
@@ -163,24 +180,22 @@ object GraphOps {
     * @return DataFrame(node, dist), dist ∈ [0, maxHops]. */
   def khopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val sym = symmetrize(edges)
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint(true)
-    var frontier = settled
-    var hop = 0
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      frontier = sym.join(frontier, sym("src") === frontier("node"))
-        .select(sym("dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(true)
-      settled = settled.unionByName(frontier)
+    withAdjacency(symmetrize(edges)) { sym =>
+      var settled = seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0)).localCheckpoint(true)
+      var frontier = settled
+      var hop = 0
+      while (hop < maxHops && !frontier.isEmpty) {
+        hop += 1
+        frontier = sym.join(frontier, sym("src") === frontier("node"))
+          .select(sym("dst").as("node")).distinct()
+          .join(settled, Seq("node"), "left_anti")
+          .withColumn("dist", lit(hop))
+          .localCheckpoint(true)
+        settled = settled.unionByName(frontier)
+      }
+      settled
     }
-    sym.unpersist()
-    settled
   }
 
   /** PER-SEED bounded BFS distances — [[khopDistances]] keyed by seed:
@@ -199,34 +214,32 @@ object GraphOps {
                        maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val par = edges.sparkSession.sparkContext.defaultParallelism
-    val sym = symmetrize(edges)
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = seeds.select(col("node").as("seed")).distinct()
-      .select(col("seed"), col("seed").as("node"))
-      .withColumn("dist", lit(0)).localCheckpoint(true)
-    var frontier = settled
-    var hop = 0
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      // the frontier checkpoint is pinned to an explicit fixed-count
-      // partitioning: the NEXT round's expansion join fans each frontier
-      // row out by its degree, so its cost follows rows×degree, not bytes
-      // — left to AQE's byte-based coalescing a small-byte frontier
-      // collapses to 1-2 partitions and the fan-out runs single-task
-      // (measured as the wall-clock of this loop). defaultParallelism
-      // scales with the cluster; the explicit count is exempt from AQE
-      // re-coalescing.
-      frontier = sym.join(frontier, sym("src") === frontier("node"))
-        .select(col("seed"), sym("dst").as("node")).distinct()
-        .join(settled, Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .repartition(par, col("seed"), col("node"))
-        .localCheckpoint(true)
-      settled = settled.unionByName(frontier)
+    withAdjacency(symmetrize(edges)) { sym =>
+      var settled = seeds.select(col("node").as("seed")).distinct()
+        .select(col("seed"), col("seed").as("node"))
+        .withColumn("dist", lit(0)).localCheckpoint(true)
+      var frontier = settled
+      var hop = 0
+      while (hop < maxHops && !frontier.isEmpty) {
+        hop += 1
+        // the frontier checkpoint is pinned to an explicit fixed-count
+        // partitioning: the NEXT round's expansion join fans each frontier
+        // row out by its degree, so its cost follows rows×degree, not bytes
+        // — left to AQE's byte-based coalescing a small-byte frontier
+        // collapses to 1-2 partitions and the fan-out runs single-task
+        // (measured as the wall-clock of this loop). defaultParallelism
+        // scales with the cluster; the explicit count is exempt from AQE
+        // re-coalescing.
+        frontier = sym.join(frontier, sym("src") === frontier("node"))
+          .select(col("seed"), sym("dst").as("node")).distinct()
+          .join(settled, Seq("seed", "node"), "left_anti")
+          .withColumn("dist", lit(hop))
+          .repartition(par, col("seed"), col("node"))
+          .localCheckpoint(true)
+        settled = settled.unionByName(frontier)
+      }
+      settled
     }
-    sym.unpersist()
-    settled
   }
 
   /** SAMPLED-SOURCE HARMONIC CENTRALITY (Eppstein–Wang estimation,
@@ -287,33 +300,31 @@ object GraphOps {
     require(k >= 2, s"k must be >= 2, got $k")
     require(salts >= 1, s"salts must be >= 1, got $salts")
     import graft.operators.Dedup
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var state = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), Dedup.lcgHash(hashIdx, col("node")).as("h"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val fromNb = sym.join(state, sym("dst") === state("node"))
-        .select(sym("src").as("node"), col("h"))
-      // distinct() first: the sketch fan-out is heavily duplicated (~8×
-      // at sf0.1), and the cheap codegen'd dedup exchange feeds the
-      // object-hash collect aggregation far fewer rows than folding the
-      // dedup into collect_set would (measured 4.7s vs 6.6s); its partial
-      // (map-side) dedup also means the exchange carries deduped rows, so
-      // the exchange itself stays UNPINNED — the heavy collect stage
-      // downstream is spread by bottomKPerNode's own pinned partitioning.
-      val all = state.unionByName(fromNb).distinct()
-      state = bottomKPerNode(all, k, salts).localCheckpoint(true)
+    withAdjacency(undirected(edges)) { sym =>
+      var state = sym.select(col("src").as("node")).distinct()
+        .select(col("node"), Dedup.lcgHash(hashIdx, col("node")).as("h"))
+        .localCheckpoint(true)
+      for (_ <- 1 to rounds) {
+        val fromNb = sym.join(state, sym("dst") === state("node"))
+          .select(sym("src").as("node"), col("h"))
+        // distinct() first: the sketch fan-out is heavily duplicated (~8×
+        // at sf0.1), and the cheap codegen'd dedup exchange feeds the
+        // object-hash collect aggregation far fewer rows than folding the
+        // dedup into collect_set would (measured 4.7s vs 6.6s); its partial
+        // (map-side) dedup also means the exchange carries deduped rows, so
+        // the exchange itself stays UNPINNED — the heavy collect stage
+        // downstream is spread by bottomKPerNode's own pinned partitioning.
+        val all = state.unionByName(fromNb).distinct()
+        state = bottomKPerNode(all, k, salts).localCheckpoint(true)
+      }
+      state.groupBy(col("node"))
+        .agg(count(lit(1)).as("m"), max(col("h")).as("hk"))
+        .select(col("node"),
+          when(col("m") < k, col("m"))
+            .otherwise(expr(s"(${k - 1} * ${Dedup.HashP}) div hk"))
+            .as("nf_est"),
+          col("m").as("sketch_size"))
     }
-    sym.unpersist()
-    state.groupBy(col("node"))
-      .agg(count(lit(1)).as("m"), max(col("h")).as("hk"))
-      .select(col("node"),
-        when(col("m") < k, col("m"))
-          .otherwise(expr(s"(${k - 1} * ${Dedup.HashP}) div hk"))
-          .as("nf_est"),
-        col("m").as("sketch_size"))
   }
 
   /** Per-node bottom-k over DISTINCT (node, h) rows, as a two-phase
@@ -374,101 +385,99 @@ object GraphOps {
                   scale: Long = 1000000L): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val par = edges.sparkSession.sparkContext.defaultParallelism
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = seeds.select(col("node").as("seed")).distinct()
-      .select(col("seed"), col("seed").as("node"))
-      .withColumn("dist", lit(0)).withColumn("sigma", lit(1L))
-      .localCheckpoint(true)
-    var frontier = settled
-    var hop = 0
-    // fixed-hop loop, no per-round emptiness probe: an exhausted frontier
-    // makes the remaining rounds no-ops over an empty materialized side,
-    // and settled stays a flat union of CHECKPOINTED frontiers (no
-    // re-checkpoint of the union — each leaf is already materialized).
-    // Frontier checkpoints are pinned to an explicit fixed-count
-    // partitioning (the perSeedDistances argument: the next expansion
-    // join's cost is rows×degree, which AQE's byte-based coalescing
-    // cannot see — unpinned, a few-MB frontier collapses to 1-2
-    // partitions and the fan-out runs single-task).
-    while (hop < maxHops) {
-      hop += 1
-      frontier = sym.join(frontier, sym("src") === frontier("node"))
-        .groupBy(col("seed"), sym("dst").as("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(settled, Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .select(col("seed"), col("node"), col("dist"), col("sigma"))
-        .repartition(par, col("seed"), col("node"))
+    withAdjacency(undirected(edges)) { sym =>
+      var settled = seeds.select(col("node").as("seed")).distinct()
+        .select(col("seed"), col("seed").as("node"))
+        .withColumn("dist", lit(0)).withColumn("sigma", lit(1L))
         .localCheckpoint(true)
-      settled = settled.unionByName(frontier)
-    }
-    val deepest = hop
-    // backward accumulation: δ at the deepest level is 0; each level
-    // pulls from its successors through the (seed-shared) edge table.
-    // Deliberately NOT a materialized successor-DAG: the DAG is
-    // |seeds|·|reachable edges| rows (measured 1.7× slower to checkpoint
-    // at sf0.1 than re-deriving per level), while the per-level join
-    // aggregates the same fan-out straight down to |level| rows.
-    //
-    // Delta rows CARRY the node's own sigma, so (a) the per-level
-    // contribution join needs no settled re-join for wsigma (it was the
-    // third join per level — every delta row originates from a settled
-    // row that had sigma in hand), and (b) the successor messages are
-    // derived by streaming the partitioned-and-cached EDGE table against
-    // the (small) successor side — sym ⋈ succ fans out ONLY the edges
-    // that point INTO a successor, instead of materializing the full
-    // level×degree expansion and filtering it afterwards.
-    // per-level row counts in ONE aggregation job: the backward loop picks
-    // its expansion side by |level| vs |succ|, and δ-rows per level are
-    // exactly the level's rows (the left_outer below preserves them), so
-    // the sizes are known up front — no per-level count() actions.
-    val levelSize: Map[Int, Long] = settled.groupBy(col("dist")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        .withDefaultValue(0L)
-    var delta = settled.filter(col("dist") === deepest)
-      .select(col("seed"), col("node"), lit(0L).as("delta"), col("sigma"))
-      .localCheckpoint(true)
-    var acc = delta.select(col("seed"), col("node"), col("delta"))
-    for (l <- (deepest - 1) to 0 by -1) {
-      val level = settled.filter(col("dist") === l)
-        .select(col("seed"), col("node"), col("sigma"))
-      val succ = delta.select(col("seed"), col("node").as("wnode"),
-        col("delta").as("wdelta"), col("sigma").as("wsigma"))
-      // expand the SMALLER side through the edge table: the fan-out
-      // materializes min(|level|, |succ|)·d̄ candidate messages before the
-      // other side's inner join prunes them (level and succ sizes swing by
-      // ~10× between adjacent BFS levels, so picking the side per level is
-      // worth ~an order of magnitude of join input). Sizes come from the
-      // precomputed per-level map — no count() actions in the loop.
-      val expanded =
-        if (levelSize(l + 1) <= levelSize(l))
-          sym.join(succ, sym("dst") === succ("wnode"))
-            .select(col("seed"), sym("src").as("node"),
-              col("wdelta"), col("wsigma"))
-            .join(level, Seq("seed", "node"))
-        else
-          sym.join(level, sym("src") === level("node"))
-            .select(col("seed"), col("node"), col("sigma"),
-              sym("dst").as("wnode"))
-            .join(succ, Seq("seed", "wnode"))
-      val contrib = expanded
-        .groupBy(col("seed"), col("node"))
-        .agg(sum(expr(s"sigma * ($scale + wdelta) div wsigma"))
-          .as("contrib"))
-      delta = level
-        .join(contrib, Seq("seed", "node"), "left_outer")
-        .select(col("seed"), col("node"),
-          coalesce(col("contrib"), lit(0L)).as("delta"), col("sigma"))
-        .repartition(par, col("seed"), col("node"))
+      var frontier = settled
+      var hop = 0
+      // fixed-hop loop, no per-round emptiness probe: an exhausted frontier
+      // makes the remaining rounds no-ops over an empty materialized side,
+      // and settled stays a flat union of CHECKPOINTED frontiers (no
+      // re-checkpoint of the union — each leaf is already materialized).
+      // Frontier checkpoints are pinned to an explicit fixed-count
+      // partitioning (the perSeedDistances argument: the next expansion
+      // join's cost is rows×degree, which AQE's byte-based coalescing
+      // cannot see — unpinned, a few-MB frontier collapses to 1-2
+      // partitions and the fan-out runs single-task).
+      while (hop < maxHops) {
+        hop += 1
+        frontier = sym.join(frontier, sym("src") === frontier("node"))
+          .groupBy(col("seed"), sym("dst").as("node"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .join(settled, Seq("seed", "node"), "left_anti")
+          .withColumn("dist", lit(hop))
+          .select(col("seed"), col("node"), col("dist"), col("sigma"))
+          .repartition(par, col("seed"), col("node"))
+          .localCheckpoint(true)
+        settled = settled.unionByName(frontier)
+      }
+      val deepest = hop
+      // backward accumulation: δ at the deepest level is 0; each level
+      // pulls from its successors through the (seed-shared) edge table.
+      // Deliberately NOT a materialized successor-DAG: the DAG is
+      // |seeds|·|reachable edges| rows (measured 1.7× slower to checkpoint
+      // at sf0.1 than re-deriving per level), while the per-level join
+      // aggregates the same fan-out straight down to |level| rows.
+      //
+      // Delta rows CARRY the node's own sigma, so (a) the per-level
+      // contribution join needs no settled re-join for wsigma (it was the
+      // third join per level — every delta row originates from a settled
+      // row that had sigma in hand), and (b) the successor messages are
+      // derived by streaming the partitioned-and-cached EDGE table against
+      // the (small) successor side — sym ⋈ succ fans out ONLY the edges
+      // that point INTO a successor, instead of materializing the full
+      // level×degree expansion and filtering it afterwards.
+      // per-level row counts in ONE aggregation job: the backward loop picks
+      // its expansion side by |level| vs |succ|, and δ-rows per level are
+      // exactly the level's rows (the left_outer below preserves them), so
+      // the sizes are known up front — no per-level count() actions.
+      val levelSize: Map[Int, Long] = settled.groupBy(col("dist")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          .withDefaultValue(0L)
+      var delta = settled.filter(col("dist") === deepest)
+        .select(col("seed"), col("node"), lit(0L).as("delta"), col("sigma"))
         .localCheckpoint(true)
-      acc = acc.unionByName(delta.select(col("seed"), col("node"), col("delta")))
+      var acc = delta.select(col("seed"), col("node"), col("delta"))
+      for (l <- (deepest - 1) to 0 by -1) {
+        val level = settled.filter(col("dist") === l)
+          .select(col("seed"), col("node"), col("sigma"))
+        val succ = delta.select(col("seed"), col("node").as("wnode"),
+          col("delta").as("wdelta"), col("sigma").as("wsigma"))
+        // expand the SMALLER side through the edge table: the fan-out
+        // materializes min(|level|, |succ|)·d̄ candidate messages before the
+        // other side's inner join prunes them (level and succ sizes swing by
+        // ~10× between adjacent BFS levels, so picking the side per level is
+        // worth ~an order of magnitude of join input). Sizes come from the
+        // precomputed per-level map — no count() actions in the loop.
+        val expanded =
+          if (levelSize(l + 1) <= levelSize(l))
+            sym.join(succ, sym("dst") === succ("wnode"))
+              .select(col("seed"), sym("src").as("node"),
+                col("wdelta"), col("wsigma"))
+              .join(level, Seq("seed", "node"))
+          else
+            sym.join(level, sym("src") === level("node"))
+              .select(col("seed"), col("node"), col("sigma"),
+                sym("dst").as("wnode"))
+              .join(succ, Seq("seed", "wnode"))
+        val contrib = expanded
+          .groupBy(col("seed"), col("node"))
+          .agg(sum(expr(s"sigma * ($scale + wdelta) div wsigma"))
+            .as("contrib"))
+        delta = level
+          .join(contrib, Seq("seed", "node"), "left_outer")
+          .select(col("seed"), col("node"),
+            coalesce(col("contrib"), lit(0L)).as("delta"), col("sigma"))
+          .repartition(par, col("seed"), col("node"))
+          .localCheckpoint(true)
+        acc = acc.unionByName(delta.select(col("seed"), col("node"), col("delta")))
+      }
+      acc.filter(col("node") =!= col("seed"))
+        .groupBy(col("node"))
+        .agg(sum(col("delta")).as("bc_scaled"), count(lit(1)).as("n_seeds"))
     }
-    sym.unpersist()
-    acc.filter(col("node") =!= col("seed"))
-      .groupBy(col("node"))
-      .agg(sum(col("delta")).as("bc_scaled"), count(lit(1)).as("n_seeds"))
   }
 
   /** Fixed-iteration SYNCHRONOUS label propagation (Raghavan, Albert,
@@ -489,22 +498,20 @@ object GraphOps {
     * @return DataFrame(node, label) over every non-isolated node. */
   def labelPropagate(edges: DataFrame, iterations: Int = 3): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      labels = sym.join(labels, sym("src") === labels("node"))
-        .groupBy(sym("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("node"))
-        .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
-        .select(col("node"), col("m.l").as("label"))
-        .localCheckpoint(true)
+    withAdjacency(undirected(edges)) { sym =>
+      var labels = sym.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")).localCheckpoint(true)
+      for (_ <- 1 to iterations) {
+        labels = sym.join(labels, sym("src") === labels("node"))
+          .groupBy(sym("dst").as("node"), col("label"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("node"))
+          .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
+          .select(col("node"), col("m.l").as("label"))
+          .localCheckpoint(true)
+      }
+      labels
     }
-    sym.unpersist()
-    labels
   }
 
   /** 1-dimensional WEISFEILER-LEMAN color refinement — the iterated
@@ -535,29 +542,27 @@ object GraphOps {
     *         round-`rounds` structural class. */
   def wlColors(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var colors = sym.select(col("src").as("node")).distinct()
-      .withColumn("color", lit(0L)).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val nbh = sym.join(colors, sym("dst") === colors("node"))
-        .groupBy(sym("src").as("node"), col("color").as("nc"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("node"))
-        .agg(sort_array(collect_list(struct(col("nc"), col("n"))))
-          .as("nbsig"))
-      // every node of the symmetrized loop-free graph has a neighbor,
-      // so the signature join is total (inner, no null branch)
-      val sigs = colors.join(nbh, "node")
-        .select(col("node"), struct(col("color"), col("nbsig")).as("sig"))
-      val reps = sigs.groupBy(col("sig")).agg(min(col("node")).as("rep"))
-      colors = sigs.join(reps, "sig")
-        .select(col("node"), col("rep").as("color"))
-        .localCheckpoint(true)
+    withAdjacency(undirected(edges)) { sym =>
+      var colors = sym.select(col("src").as("node")).distinct()
+        .withColumn("color", lit(0L)).localCheckpoint(true)
+      for (_ <- 1 to rounds) {
+        val nbh = sym.join(colors, sym("dst") === colors("node"))
+          .groupBy(sym("src").as("node"), col("color").as("nc"))
+          .agg(count(lit(1)).as("n"))
+          .groupBy(col("node"))
+          .agg(sort_array(collect_list(struct(col("nc"), col("n"))))
+            .as("nbsig"))
+        // every node of the symmetrized loop-free graph has a neighbor,
+        // so the signature join is total (inner, no null branch)
+        val sigs = colors.join(nbh, "node")
+          .select(col("node"), struct(col("color"), col("nbsig")).as("sig"))
+        val reps = sigs.groupBy(col("sig")).agg(min(col("node")).as("rep"))
+        colors = sigs.join(reps, "sig")
+          .select(col("node"), col("rep").as("color"))
+          .localCheckpoint(true)
+      }
+      colors
     }
-    sym.unpersist()
-    colors
   }
 
   /** NEWMAN MODULARITY of a node partition over an undirected graph —
@@ -634,25 +639,23 @@ object GraphOps {
       s"dampingPpm must be in [0, 1e6], got $dampingPpm")
     val sym = symmetrize(edges)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val e = sym.join(deg, "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = deg.count() // one bounded action; also warms the edge cache
-    require(n > 0, "pageRank needs a non-empty edge list")
-    val r0 = scale / n
-    val base = r0 * (1000000L - dampingPpm) / 1000000L
-    var ranks = deg.select(col("src").as("node"), lit(r0).as("r"))
-    for (_ <- 1 to iterations) {
-      ranks = e.join(ranks, e("src") === ranks("node"))
-        .select(e("dst").as("node"), expr("r div od").as("c"))
-        .groupBy(col("node"))
-        .agg(sum(col("c")).as("s"))
-        .select(col("node"),
-          (lit(base) + expr(s"($dampingPpm * s) div 1000000")).as("r"))
-        .localCheckpoint(true)
+    withAdjacency(sym.join(deg, "src")) { e =>
+      val n = deg.count() // one bounded action: N for the uniform init
+      require(n > 0, "pageRank needs a non-empty edge list")
+      val r0 = scale / n
+      val base = r0 * (1000000L - dampingPpm) / 1000000L
+      var ranks = deg.select(col("src").as("node"), lit(r0).as("r"))
+      for (_ <- 1 to iterations) {
+        ranks = e.join(ranks, e("src") === ranks("node"))
+          .select(e("dst").as("node"), expr("r div od").as("c"))
+          .groupBy(col("node"))
+          .agg(sum(col("c")).as("s"))
+          .select(col("node"),
+            (lit(base) + expr(s"($dampingPpm * s) div 1000000")).as("r"))
+          .localCheckpoint(true)
+      }
+      ranks.select(col("node"), col("r").as("rank_ppt"))
     }
-    e.unpersist()
-    ranks.select(col("node"), col("r").as("rank_ppt"))
   }
 
   /** Bounded-round weighted shortest paths (synchronous Bellman-Ford,
@@ -678,30 +681,28 @@ object GraphOps {
     *         `rounds` hops. */
   def ssspBounded(wEdges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e = wEdges.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = sources.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    var frontier = dist
-    var r = 0
-    while (r < rounds && !frontier.isEmpty) {
-      r += 1
-      val cand = e.join(frontier, e("src") === frontier("node"))
-        .select(e("dst").as("node"), (col("dist") + col("w")).as("c"))
-        .groupBy(col("node")).agg(min(col("c")).as("c"))
-      val merged = dist.join(cand, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(col("dist"), col("c")).as("dist"), // least skips nulls
-          (col("dist").isNull || (col("c").isNotNull &&
-            col("c") < col("dist"))).as("improved"))
-        .localCheckpoint(true)
-      frontier = merged.filter(col("improved"))
-        .select(col("node"), col("dist"))
-      dist = merged.select(col("node"), col("dist"))
+    withAdjacency(wEdges.select(col("src"), col("dst"), col("w"))) { e =>
+      var dist = sources.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)).localCheckpoint(true)
+      var frontier = dist
+      var r = 0
+      while (r < rounds && !frontier.isEmpty) {
+        r += 1
+        val cand = e.join(frontier, e("src") === frontier("node"))
+          .select(e("dst").as("node"), (col("dist") + col("w")).as("c"))
+          .groupBy(col("node")).agg(min(col("c")).as("c"))
+        val merged = dist.join(cand, Seq("node"), "full_outer")
+          .select(col("node"),
+            least(col("dist"), col("c")).as("dist"), // least skips nulls
+            (col("dist").isNull || (col("c").isNotNull &&
+              col("c") < col("dist"))).as("improved"))
+          .localCheckpoint(true)
+        frontier = merged.filter(col("improved"))
+          .select(col("node"), col("dist"))
+        dist = merged.select(col("node"), col("dist"))
+      }
+      dist
     }
-    e.unpersist()
-    dist
   }
 
   /** One-row structural summary of an undirected graph — the sanity
@@ -714,7 +715,7 @@ object GraphOps {
     * distinct total is the corner sum div 3). All inputs are combinable
     * aggregations; the result is one row regardless of |E|. */
   def graphStats(edges: DataFrame): DataFrame = {
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
+    val sym = undirected(edges)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val degStats = deg.agg(count(lit(1)).as("n_nodes"), max(col("d")).as("max_degree"),
       sum(expr("d * (d - 1) div 2")).as("n_wedges"))
@@ -746,7 +747,7 @@ object GraphOps {
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var cur = symmetrize(edges).filter(col("src") =!= col("dst"))
+    var cur = undirected(edges)
       .localCheckpoint(true)
     var stable = false
     var r = 0
@@ -803,7 +804,7 @@ object GraphOps {
     import graft.operators.Dedup.lcgHash
     def enc(i: Int, c: Column) =
       lcgHash((hashIdx + i) % 64, c) * lit(stride) + c
-    var cur = symmetrize(edges).filter(col("src") =!= col("dst"))
+    var cur = undirected(edges)
       .localCheckpoint(true)
     var und = cur.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
@@ -826,7 +827,8 @@ object GraphOps {
       // almost entirely job-scheduling floors (profiled: no stage above
       // 0.2s)
       val joined = winners.unionByName(isolated)
-      // mis is a flat union of ≤rounds checkpointed `joined` leaves — no
+      // mis is a union of ≤rounds deterministic `joined` subtrees, each
+      // over the checkpointed cur/und leaves of its round — no
       // re-checkpoint of the union (the betweenness `settled` argument):
       // dropping it saves one materialization job per round
       mis = mis.unionByName(joined.withColumn("round", lit(r)))
@@ -959,7 +961,7 @@ object GraphOps {
     // explicit z-keyed partitioning so the fan-out spreads (the
     // userGraphEdges/perSeedDistances argument — AQE's byte-based
     // coalescing would run it on 1-2 tasks)
-    val sym = symmetrize(edges).filter(col("src") =!= col("dst"))
+    val sym = undirected(edges)
       .repartition(edges.sparkSession.sparkContext.defaultParallelism,
         col("dst"))
     val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
@@ -1002,29 +1004,27 @@ object GraphOps {
       s"dampingPpm must be in [0, 1e6], got $dampingPpm")
     val sym = symmetrize(edges)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val e = sym.join(deg, "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val s = seeds.select(col("node")).distinct().localCheckpoint(true)
-    val nS = s.count()
-    require(nS > 0, "personalizedPageRank needs a non-empty seed set")
-    val r0 = scale / nS
-    val base = r0 * (1000000L - dampingPpm) / 1000000L
-    val seedBase = s.withColumn("b", lit(base))
-    var ranks = s.withColumn("r", lit(r0))
-    for (_ <- 1 to iterations) {
-      val contrib = e.join(ranks, e("src") === ranks("node"))
-        .select(e("dst").as("node"), expr("r div od").as("c"))
-        .groupBy(col("node"))
-        .agg(sum(col("c")).as("s"))
-        .select(col("node"), expr(s"($dampingPpm * s) div 1000000").as("c"))
-      ranks = contrib.join(seedBase, Seq("node"), "full_outer")
-        .select(col("node"),
-          (coalesce(col("c"), lit(0L)) + coalesce(col("b"), lit(0L))).as("r"))
-        .localCheckpoint(true)
+    withAdjacency(sym.join(deg, "src")) { e =>
+      val s = seeds.select(col("node")).distinct().localCheckpoint(true)
+      val nS = s.count()
+      require(nS > 0, "personalizedPageRank needs a non-empty seed set")
+      val r0 = scale / nS
+      val base = r0 * (1000000L - dampingPpm) / 1000000L
+      val seedBase = s.withColumn("b", lit(base))
+      var ranks = s.withColumn("r", lit(r0))
+      for (_ <- 1 to iterations) {
+        val contrib = e.join(ranks, e("src") === ranks("node"))
+          .select(e("dst").as("node"), expr("r div od").as("c"))
+          .groupBy(col("node"))
+          .agg(sum(col("c")).as("s"))
+          .select(col("node"), expr(s"($dampingPpm * s) div 1000000").as("c"))
+        ranks = contrib.join(seedBase, Seq("node"), "full_outer")
+          .select(col("node"),
+            (coalesce(col("c"), lit(0L)) + coalesce(col("b"), lit(0L))).as("r"))
+          .localCheckpoint(true)
+      }
+      ranks.select(col("node"), col("r").as("rank_ppt"))
     }
-    e.unpersist()
-    ranks.select(col("node"), col("r").as("rank_ppt"))
   }
 
   /** DeepWalk-style RANDOM-WALK CORPUS generation (Perozzi, Al-Rfou,
@@ -1057,39 +1057,37 @@ object GraphOps {
                   seed: Long = 7L): DataFrame = {
     require(length >= 0, s"length must be >= 0, got $length")
     require(walksPerNode >= 1, s"walksPerNode must be >= 1, got $walksPerNode")
-    val sym = symmetrize(edges)
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cur = sym.select(col("src").as("start")).distinct()
-      .withColumn("walk", explode(array((0 until walksPerNode).map(lit): _*)))
-      .withColumn("node", col("start"))
-      .localCheckpoint(true)
-    var acc = cur.withColumn("step", lit(0))
-      .select(col("start"), col("walk"), col("step"), col("node"))
-    // the salt must multiply the PER-CANDIDATE term (added as a constant
-    // it shifts every candidate equally and the argmin never changes),
-    // and that multiplier must be large enough that one candidate step
-    // crosses a mod boundary — otherwise the argmin degenerates to
-    // "smallest neighbor" for every seed. Products are double-modded so
-    // arbitrary int64 node ids cannot overflow: (id % P)·(m % P) ≤ (P-1)²
-    // < 2⁶³, identical arithmetic on the DuckDB side.
-    val P = 2147483647L
-    val dstMult = (2654435761L +
-      java.lang.Math.floorMod(seed, 65536L) * 32452843L) % P
-    for (t <- 1 to length) {
-      val h = ((col("start") % P) * lit(1103515245L) % P +
-        col("walk") * lit(12345L) + lit(t.toLong) * lit(97003L) +
-        (sym("dst") % P) * lit(dstMult) % P) % P
-      cur = cur.join(sym, cur("node") === sym("src"))
-        .groupBy(col("start"), col("walk"))
-        .agg(min(struct(h.as("h"), sym("dst").as("d"))).as("m"))
-        .select(col("start"), col("walk"), col("m.d").as("node"))
+    withAdjacency(symmetrize(edges)) { sym =>
+      var cur = sym.select(col("src").as("start")).distinct()
+        .withColumn("walk", explode(array((0 until walksPerNode).map(lit): _*)))
+        .withColumn("node", col("start"))
         .localCheckpoint(true)
-      acc = acc.unionByName(cur.withColumn("step", lit(t))
-        .select(col("start"), col("walk"), col("step"), col("node")))
+      var acc = cur.withColumn("step", lit(0))
+        .select(col("start"), col("walk"), col("step"), col("node"))
+      // the salt must multiply the PER-CANDIDATE term (added as a constant
+      // it shifts every candidate equally and the argmin never changes),
+      // and that multiplier must be large enough that one candidate step
+      // crosses a mod boundary — otherwise the argmin degenerates to
+      // "smallest neighbor" for every seed. Products are double-modded so
+      // arbitrary int64 node ids cannot overflow: (id % P)·(m % P) ≤ (P-1)²
+      // < 2⁶³, identical arithmetic on the DuckDB side.
+      val P = 2147483647L
+      val dstMult = (2654435761L +
+        java.lang.Math.floorMod(seed, 65536L) * 32452843L) % P
+      for (t <- 1 to length) {
+        val h = ((col("start") % P) * lit(1103515245L) % P +
+          col("walk") * lit(12345L) + lit(t.toLong) * lit(97003L) +
+          (sym("dst") % P) * lit(dstMult) % P) % P
+        cur = cur.join(sym, cur("node") === sym("src"))
+          .groupBy(col("start"), col("walk"))
+          .agg(min(struct(h.as("h"), sym("dst").as("d"))).as("m"))
+          .select(col("start"), col("walk"), col("m.d").as("node"))
+          .localCheckpoint(true)
+        acc = acc.unionByName(cur.withColumn("step", lit(t))
+          .select(col("start"), col("walk"), col("step"), col("node")))
+      }
+      acc
     }
-    sym.unpersist()
-    acc
   }
 
   /** Bounded EARLIEST-ARRIVAL reachability over a TEMPORAL edge list —
@@ -1121,33 +1119,31 @@ object GraphOps {
   def earliestArrival(tEdges: DataFrame, seeds: DataFrame, rounds: Int,
                       startTime: Long = 0L): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e = tEdges.select(col("src"), col("dst"), col("t"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = seeds.select(col("node")).distinct()
-      .withColumn("arrival", lit(startTime)).localCheckpoint(true)
-    var frontier = settled
-    var r = 0
-    while (r < rounds && !frontier.isEmpty) {
-      r += 1
-      val relaxed = e.join(frontier, e("src") === frontier("node"))
-        .filter(col("t") >= col("arrival"))
-        .groupBy(e("dst").as("node"))
-        .agg(min(col("t")).as("cand"))
-      val merged = settled.join(relaxed, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(coalesce(col("arrival"), col("cand")),
-            coalesce(col("cand"), col("arrival"))).as("arrival"),
-          (col("cand").isNotNull &&
-            (col("arrival").isNull || col("cand") < col("arrival")))
-            .as("improved"))
-        .localCheckpoint(true)
-      frontier = merged.filter(col("improved"))
-        .select(col("node"), col("arrival"))
-      settled = merged.select(col("node"), col("arrival"))
+    withAdjacency(tEdges.select(col("src"), col("dst"), col("t"))) { e =>
+      var settled = seeds.select(col("node")).distinct()
+        .withColumn("arrival", lit(startTime)).localCheckpoint(true)
+      var frontier = settled
+      var r = 0
+      while (r < rounds && !frontier.isEmpty) {
+        r += 1
+        val relaxed = e.join(frontier, e("src") === frontier("node"))
+          .filter(col("t") >= col("arrival"))
+          .groupBy(e("dst").as("node"))
+          .agg(min(col("t")).as("cand"))
+        val merged = settled.join(relaxed, Seq("node"), "full_outer")
+          .select(col("node"),
+            least(coalesce(col("arrival"), col("cand")),
+              coalesce(col("cand"), col("arrival"))).as("arrival"),
+            (col("cand").isNotNull &&
+              (col("arrival").isNull || col("cand") < col("arrival")))
+              .as("improved"))
+          .localCheckpoint(true)
+        frontier = merged.filter(col("improved"))
+          .select(col("node"), col("arrival"))
+        settled = merged.select(col("node"), col("arrival"))
+      }
+      settled
     }
-    e.unpersist()
-    settled
   }
 
   /** NODE2VEC-style BIASED walk corpus (Grover, Leskovec 2016): like
@@ -1176,48 +1172,46 @@ object GraphOps {
     require(walksPerNode >= 1, s"walksPerNode must be >= 1, got $walksPerNode")
     require(retPermille > 0 && inPermille > 0 && outPermille > 0,
       "weights must be positive")
-    val sym = symmetrize(edges)
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // adjacency probe side: marker rows for the (prev, dst) test
-    val adj = sym.select(col("src").as("p_src"), col("dst").as("p_dst"))
-      .withColumn("is_adj", lit(1))
-    var cur = sym.select(col("src").as("start")).distinct()
-      .withColumn("walk", explode(array((0 until walksPerNode).map(lit): _*)))
-      .withColumn("node", col("start"))
-      .withColumn("prev", lit(null).cast(sym.schema("src").dataType))
-      .localCheckpoint(true)
-    var acc = cur.withColumn("step", lit(0))
-      .select(col("start"), col("walk"), col("step"), col("node"))
-    val P = 2147483647L
-    val dstMult = (2654435761L +
-      java.lang.Math.floorMod(seed, 65536L) * 32452843L) % P
-    for (t <- 1 to length) {
-      val h = ((col("start") % P) * lit(1103515245L) % P +
-        col("walk") * lit(12345L) + lit(t.toLong) * lit(97003L) +
-        (sym("dst") % P) * lit(dstMult) % P) % P
-      val w = when(col("prev").isNull, lit(1000L))
-        .when(sym("dst") === col("prev"), lit(retPermille))
-        .when(col("is_adj").isNotNull, lit(inPermille))
-        .otherwise(lit(outPermille))
-      // integer h div w without float hazards: the numerator is an exact
-      // multiple, so the double division is exactly representable and the
-      // cast equals the oracle's `//`
-      val pr = ((h - h % w) / w).cast("long")
-      cur = cur.join(sym, cur("node") === sym("src"))
-        .join(adj, col("prev") === col("p_src") &&
-          sym("dst") === col("p_dst"), "left_outer")
-        .groupBy(col("start"), col("walk"))
-        .agg(min(struct(pr.as("pr"), sym("dst").as("d"),
-          col("node").as("c"))).as("m"))
-        .select(col("start"), col("walk"), col("m.d").as("node"),
-          col("m.c").as("prev"))
+    withAdjacency(symmetrize(edges)) { sym =>
+      // adjacency probe side: marker rows for the (prev, dst) test
+      val adj = sym.select(col("src").as("p_src"), col("dst").as("p_dst"))
+        .withColumn("is_adj", lit(1))
+      var cur = sym.select(col("src").as("start")).distinct()
+        .withColumn("walk", explode(array((0 until walksPerNode).map(lit): _*)))
+        .withColumn("node", col("start"))
+        .withColumn("prev", lit(null).cast(sym.schema("src").dataType))
         .localCheckpoint(true)
-      acc = acc.unionByName(cur.withColumn("step", lit(t))
-        .select(col("start"), col("walk"), col("step"), col("node")))
+      var acc = cur.withColumn("step", lit(0))
+        .select(col("start"), col("walk"), col("step"), col("node"))
+      val P = 2147483647L
+      val dstMult = (2654435761L +
+        java.lang.Math.floorMod(seed, 65536L) * 32452843L) % P
+      for (t <- 1 to length) {
+        val h = ((col("start") % P) * lit(1103515245L) % P +
+          col("walk") * lit(12345L) + lit(t.toLong) * lit(97003L) +
+          (sym("dst") % P) * lit(dstMult) % P) % P
+        val w = when(col("prev").isNull, lit(1000L))
+          .when(sym("dst") === col("prev"), lit(retPermille))
+          .when(col("is_adj").isNotNull, lit(inPermille))
+          .otherwise(lit(outPermille))
+        // integer h div w without float hazards: the numerator is an exact
+        // multiple, so the double division is exactly representable and the
+        // cast equals the oracle's `//`
+        val pr = ((h - h % w) / w).cast("long")
+        cur = cur.join(sym, cur("node") === sym("src"))
+          .join(adj, col("prev") === col("p_src") &&
+            sym("dst") === col("p_dst"), "left_outer")
+          .groupBy(col("start"), col("walk"))
+          .agg(min(struct(pr.as("pr"), sym("dst").as("d"),
+            col("node").as("c"))).as("m"))
+          .select(col("start"), col("walk"), col("m.d").as("node"),
+            col("m.c").as("prev"))
+          .localCheckpoint(true)
+        acc = acc.unionByName(cur.withColumn("step", lit(t))
+          .select(col("start"), col("walk"), col("step"), col("node")))
+      }
+      acc
     }
-    sym.unpersist()
-    acc
   }
 
   /** Bounded TRANSITIVE CLOSURE of a DIRECTED edge list with minimum hop
@@ -1248,24 +1242,22 @@ object GraphOps {
     *         appear only when a directed cycle returns to the origin. */
   def transitiveClosure(edges: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = e.withColumn("dist", lit(1)).localCheckpoint(true)
-    var frontier = settled
-    var d = 1
-    while (d < maxDepth && !frontier.isEmpty) {
-      d += 1
-      frontier = frontier.select(col("src"), col("dst").as("mid"))
-        .join(e.select(col("src").as("mid"), col("dst")), "mid")
-        .select(col("src"), col("dst")).distinct()
-        .join(settled, Seq("src", "dst"), "left_anti")
-        .withColumn("dist", lit(d))
-        .localCheckpoint(true)
-      settled = settled.unionByName(frontier)
+    withAdjacency(edges.select(col("src"), col("dst")).distinct()) { e =>
+      var settled = e.withColumn("dist", lit(1)).localCheckpoint(true)
+      var frontier = settled
+      var d = 1
+      while (d < maxDepth && !frontier.isEmpty) {
+        d += 1
+        frontier = frontier.select(col("src"), col("dst").as("mid"))
+          .join(e.select(col("src").as("mid"), col("dst")), "mid")
+          .select(col("src"), col("dst")).distinct()
+          .join(settled, Seq("src", "dst"), "left_anti")
+          .withColumn("dist", lit(d))
+          .localCheckpoint(true)
+        settled = settled.unionByName(frontier)
+      }
+      settled
     }
-    e.unpersist()
-    settled
   }
 
   /** MINED-RULE APPLICATION — the data-driven half of the KG-completion

@@ -35,14 +35,14 @@ object BratParser {
     * Python, where len/slicing count codepoints); Java Strings index UTF-16
     * code units, which diverge as soon as a document contains an astral
     * character (the shipped sample's 26904000.txt has U+1D700 twice —
-    * naive substring shifts every later span by +2). BMP-only documents
-    * take the O(1) substring fast path. */
-  private def cpSubstring(s: String, bmpOnly: Boolean, b: Int, e: Int): String =
-    if (bmpOnly) s.substring(b, e)
+    * naive substring shifts every later span by +2). This maps a codepoint
+    * span to the UTF-16 span the engine's doc text is indexed in;
+    * BMP-only documents take the identity fast path. */
+  private def utf16Span(s: String, bmpOnly: Boolean, b: Int, e: Int): (Int, Int) =
+    if (bmpOnly) (b, e)
     else {
       val bi = s.offsetByCodePoints(0, b)
-      val ei = s.offsetByCodePoints(bi, e - b)
-      s.substring(bi, ei)
+      (bi, s.offsetByCodePoints(bi, e - b))
     }
 
   def parse(docId: String, annContent: String, txtContent: String): AnnDoc = {
@@ -66,15 +66,15 @@ object BratParser {
           }
           if (spans.length > 1) multiSpan += tid
           val text = if (parts.length > 2) parts(2) else ""
+          val (b, e) = utf16Span(txtContent, bmpOnly, spans.head._1, spans.head._2)
           // span-text reconstruction equality — program_halt analog
           // (brat_json_converter.py:228-242); single-span only
           if (spans.length == 1) {
-            val (b, e) = spans.head
-            val recon = cpSubstring(txtContent, bmpOnly, b, e)
+            val recon = txtContent.substring(b, e)
             require(recon == text,
               s"$docId/$tid: span text '$recon' != annotated '$text'")
           }
-          mentions += ((tid, tag, spans.head._1, spans.head._2, text))
+          mentions += ((tid, tag, b, e, text))
         case 'R' =>
           val Array(rtype, a1, a2) = parts(1).split(' ')
           relations += ((rtype, a1.split(':')(1), a2.split(':')(1)))

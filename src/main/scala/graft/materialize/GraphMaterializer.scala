@@ -1,6 +1,7 @@
 package graft.materialize
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.core.LineageRow
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,13 +34,22 @@ object GraphMaterializer {
 
   private def lineagePath(table: String) = s"$table/_lineage"
 
-  /** Buckets recorded ok in a table's lineage (empty frame if none yet). */
-  def completedBuckets(spark: SparkSession, table: String): DataFrame = {
+  /** A table's lineage rows. Only a missing (or, by the explicit schema,
+    * a crashed first append's `_temporary`-only) lineage reads as empty;
+    * a corrupt or unreadable one fails, never reads as "nothing done". */
+  private def readLineage(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    try spark.read.parquet(lineagePath(table))
-      .filter($"status" === "ok").select($"bucket").distinct()
-    catch { case _: Throwable => Seq.empty[Int].toDF("bucket") }
+    val p = new org.apache.hadoop.fs.Path(lineagePath(table))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p))
+      spark.read.schema(Encoders.product[LineageRow].schema).parquet(p.toString)
+    else Seq.empty[LineageRow].toDF()
   }
+
+  /** Buckets recorded ok in a table's lineage (empty frame if none yet). */
+  def completedBuckets(spark: SparkSession, table: String): DataFrame =
+    readLineage(spark, table)
+      .filter(col("status") === "ok").select(col("bucket")).distinct()
 
   /** Write `df` (must carry doc_id) bucketed, skipping buckets whose
     * lineage row says ok; append lineage for newly written buckets.
@@ -84,13 +94,7 @@ object GraphMaterializer {
     * collapse with max. */
   def lineageRowCount(spark: SparkSession, table: String): Long = {
     import spark.implicits._
-    // a table with no lineage yet counts 0; any OTHER failure (corrupt
-    // footer, permission, partial write) must surface, not read as "zero
-    // rows written" — that would make a failed run look like an empty one
-    val p = new org.apache.hadoop.fs.Path(lineagePath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    spark.read.parquet(lineagePath(table))
+    readLineage(spark, table)
       .filter($"status" === "ok")
       .groupBy($"bucket").agg(max($"n_triples").as("n"))
       .agg(coalesce(sum($"n"), lit(0L))).as[Long].head()

@@ -81,14 +81,15 @@ object DerivationStore {
     def pattern(p: String): TriplePattern = {
       val toks = p.trim.split("\\s+")
       require(toks.length == 3,
-        s"a triple pattern needs exactly 3 terms, got '${p.trim}'")
+        s"a triple pattern needs exactly 3 terms, got '${p.trim}' " +
+          "(body patterns are separated by a '.' with whitespace around it)")
       TriplePattern(term(toks(0)), term(toks(1)), term(toks(2)))
     }
     // split only on whitespace-delimited separator tokens: "a.b" or
     // "x=>y" inside a term is content, " . " / " => " is structure
     val halves = rule.trim.split("(^|\\s)=>(\\s|$)")
     require(halves.length == 2,
-      s"a rule needs exactly one standalone '=>', got '$rule'")
+      s"a rule needs exactly one '=>' with whitespace around it, got '$rule'")
     val body = halves(0).split("(^|\\s)\\.(\\s|$)").map(pattern).toSeq
     require(body.nonEmpty, "rule body is empty")
     (body, pattern(halves(1)))
@@ -201,8 +202,8 @@ object DerivationStore {
   * Documents are (doc_id, text) parquet; edges come from the catalog's
   * single-scan typed extraction ([[graft.Queries.kgTypedTriplesOf]],
   * distinct). The rule is a CLI argument in [[DerivationStore.parseRule]]
-  * form (e.g. `"?x filter ?m . ?m group ?y => ?x scan ?y"`) — the store
-  * rejects a merge under a different rule than it committed to. `infer`
+  * form (e.g. `"?x filter ?m . ?m group ?y => ?x scan ?y"`, whitespace
+  * around every `.` and `=>`) — the store rejects a merge under a different rule than it committed to. `infer`
   * writes the current inferred view (stored heads minus observed edges)
   * without touching any corpus. Prints one summary line. Sessions come
   * from [[graft.GraftSession.production]] — default split sizes, AQE on. */
@@ -215,7 +216,9 @@ object DerivationJob {
     require(Set("init", "merge").contains(mode) && args.length == 4 ||
       mode == "infer" && args.length == 3,
       "usage: DerivationJob init|merge <docsParquet> <storeDir> \"<rule>\"" +
-        " | DerivationJob infer <storeDir> <outParquet>")
+        " | DerivationJob infer <storeDir> <outParquet>; a rule reads" +
+        " \"?x p ?m . ?m q ?y => ?x r ?y\", with whitespace around every" +
+        " '.' and '=>'")
     if (mode == "infer") {
       DerivationStore.readInferred(spark, args(1))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)

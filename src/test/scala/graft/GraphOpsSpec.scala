@@ -59,6 +59,22 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(a("x") == a("y"))
   }
 
+  test("pageRank and personalizedPageRank release the edge cache when a " +
+    "precondition fails") {
+    import org.apache.spark.sql.CacheProbe
+    val before = CacheProbe.entries(spark)
+    intercept[IllegalArgumentException] {
+      GraphOps.pageRank(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    }
+    assert(CacheProbe.entries(spark) == before, "pageRank left its edge table cached")
+    intercept[IllegalArgumentException] {
+      GraphOps.personalizedPageRank(Seq((1L, 2L)).toDF("src", "dst"),
+        Seq.empty[Long].toDF("node"))
+    }
+    assert(CacheProbe.entries(spark) == before,
+      "personalizedPageRank left its edge table cached")
+  }
+
   test("pageRank iterations=0 returns the uniform init; directed dup edges collapse") {
     // (a,b) and (b,a) in the input must symmetrize to ONE undirected edge
     val got = runPageRank(Seq(("a", "b"), ("b", "a")), iters = 0)
@@ -734,12 +750,15 @@ class GraphOpsSpec extends AnyFunSuite {
     // the user_mis catalog entry runs lubyMis at the default stride; its
     // node ids are the user-graph vertex ids. Assert the precondition
     // here (once, in the suite) instead of a per-call max(node) action,
-    // which would add a full-table aggregation job to every invocation.
-    val edges = graft.Queries.userGraphEdges(spark, "/root/testdata/sf0.001")
-    val mx = edges.agg(greatest(max(col("src")), max(col("dst")))
-      .cast("long")).head.getLong(0)
-    assert(mx < 10000000L,
-      s"user-graph ids must fit lubyMis's default stride, max id = $mx")
+    // which would add a full-table aggregation job to every invocation —
+    // at every staged scale, up to the sf0.1 the bench runs user_mis on.
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val edges = graft.Queries.userGraphEdges(spark, s"/root/testdata/$sf")
+      val mx = edges.agg(greatest(max(col("src")), max(col("dst")))
+        .cast("long")).head.getLong(0)
+      assert(mx < 10000000L,
+        s"$sf: user-graph ids must fit lubyMis's default stride, max id = $mx")
+    }
   }
 
   test("lubyMis: a starved path end joins through the isolated rule") {

@@ -90,4 +90,24 @@ class LineageSpec extends AnyFunSuite {
     assert(GraphMaterializer.readTable(spark, table).count() == 100,
       "dynamic overwrite must not duplicate rows")
   }
+
+  test("resume: a missing lineage reads as empty, a corrupt one fails the write") {
+    val table = freshTable()
+    assert(GraphMaterializer.completedBuckets(spark, table).count() == 0)
+    assert(GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4) == 4)
+    // lineage files that are not parquet must fail the resume, not read as
+    // "nothing done" and silently rewrite every bucket
+    new java.io.File(s"$table/_lineage").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.write(f.toPath, "not parquet".getBytes("UTF-8")))
+    intercept[org.apache.spark.SparkException] {
+      GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4)
+    }
+    // a lineage dir holding only a crashed first append's _temporary is
+    // still "nothing done"
+    val crashed = freshTable()
+    Files.createDirectories(java.nio.file.Paths.get(s"$crashed/_lineage/_temporary/0"))
+    assert(GraphMaterializer.completedBuckets(spark, crashed).count() == 0)
+    assert(GraphMaterializer.writeResumable(spark, data(100), crashed, nBuckets = 4) == 4)
+  }
 }

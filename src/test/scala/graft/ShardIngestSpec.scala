@@ -132,6 +132,14 @@ class ShardIngestSpec extends AnyFunSuite {
     // codepoint offsets: the astral doc's spans reconstruct to the annotated text
     assert(shard.goldMentions.filter(col("doc_id") === "astral1")
       .select("text").as[String].collect().toSeq.sorted == Seq("ABC1", "XYZ2"))
+    // and gold offsets come out in the UTF-16 unit of the ingested text:
+    // every single-span mention sits at [bgn, end) of its doc, astral1 too
+    val text = shard.docs.collect().map(d => d.doc_id -> d.spans.head.text).toMap
+    val multi = shard.multiSpan.collect().toSet
+    val golds = shard.goldMentions.collect().filterNot(m => multi((m.doc_id, m.t_id)))
+    assert(golds.count(_.doc_id == "astral1") == 2)
+    golds.foreach(m => assert(text(m.doc_id).substring(m.bgn, m.end) == m.text,
+      s"${m.doc_id}/${m.t_id} at [${m.bgn}, ${m.end})"))
   }
 
   test("AnnotatorNotes STRING ids are captured as norm_ids") {

@@ -1,0 +1,25 @@
+#!/usr/bin/env bash
+# Plan-identity check for a refactor of the lazy user-graph edge builders:
+# dumps their formatted physical plans (tools/PlanDump.scala) in a base
+# checkout and in a changed one, normalizes expression, plan and RDD ids,
+# and diffs. Exit status 0 and no diff output means the plans are identical.
+#
+# usage: tools/plan_diff.sh <baseCheckout> <changedCheckout> <sfDir> <workDir>
+# e.g.   mkdir -p /tmp/base && git archive <parent> | tar -x -C /tmp/base
+#        tools/plan_diff.sh /tmp/base . <testdata>/sf0.01 /tmp/plans
+# sbt runs with the caller's COURSIER_MODE/SBT_OPTS (offline settings).
+set -euo pipefail
+mkdir -p "$4"
+base=$(cd "$1" && pwd); change=$(cd "$2" && pwd); sf=$3; work=$(cd "$4" && pwd)
+dump=$(cd "$(dirname "$0")" && pwd)/PlanDump.scala
+for side in base change; do
+  dir=${!side}
+  (cd "$dir" && sbt --batch -Dsbt.log.noformat=true \
+    "set Test / unmanagedSources += file(\"$dump\")" \
+    "Test/runMain graft.PlanDump $sf $work/$side.raw" >"$work/$side.log" 2>&1) \
+    || { echo "PlanDump failed in $dir; see $work/$side.log" >&2; exit 2; }
+  # ids: expression #12, [plan_id=3], [id=#7], RDD ids like ExistingRDD[5]
+  sed -E -e 's/#[0-9]+/#N/g' -e 's/plan_id=[0-9]+/plan_id=N/g' \
+    -e 's/RDD\[[0-9]+\]/RDD[N]/g' "$work/$side.raw" >"$work/$side.txt"
+done
+diff -u "$work/base.txt" "$work/change.txt"
