@@ -254,7 +254,7 @@ object Queries {
       .agg(count(lit(1)).as("n_events"))
       .select(unix_timestamp(col("window.start")).as("bucket_start"),
         col("event_type"), col("n_events"))
-    try s.catalog.dropTempView("graft_stream_q13") catch { case _: Throwable => }
+    s.catalog.dropTempView("graft_stream_q13") // false when absent
     val q = stream.writeStream.outputMode("complete")
       .format("memory").queryName("graft_stream_q13").start()
     try q.processAllAvailable() finally q.stop()
@@ -274,9 +274,8 @@ object Queries {
   def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
     Dedup.ngramJaccardPairsPrefix(table(s, dir, "documents"), minSharedPct = 80)
 
-  /** Portable-hash forms in the judged catalog (oracle-verifiable bit-
-    * exactly); the xxhash64 production forms are spec-tested equivalents
-    * of the same banding/blocking constructions. The vocabKey shares the
+  /** The near-dup operators' one hash family: portable LCG hashes,
+    * oracle-verifiable bit-exactly. The vocabKey shares the
     * token-rank vocabulary across queries within the session: minhash_lsh
     * and lsh_verified read one staged shingle-3 vocab, simhash and
     * text_fingerprint one staged word vocab — 2 vocab builds per corpus
@@ -803,8 +802,7 @@ object Queries {
   }
 
   /** Quantized-integer cosine pairs at τ = 0.15 (τ² = 9/400), LSH-blocked —
-    * the integer cross-multiply compare makes the oracle bit-exact; the
-    * float cosineNearDupPairs variant remains spec-tested. */
+    * the integer cross-multiply compare makes the oracle bit-exact. */
   def dedupEmbeddingCosine(s: SparkSession, dir: String): DataFrame =
     SimSearch.quantizedCosinePairs(table(s, dir, "embeddings"),
       tauNum = 9L, tauDen = 400L)
@@ -1402,7 +1400,7 @@ object Queries {
     val edges = kgTriplesOf(stream)
       .groupBy(col("subj"), col("pred"), col("obj"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))
-    try s.catalog.dropTempView("graft_stream_kg") catch { case _: Throwable => }
+    s.catalog.dropTempView("graft_stream_kg") // false when absent
     val q = edges.writeStream.outputMode("complete")
       .format("memory").queryName("graft_stream_kg").start()
     try q.processAllAvailable() finally q.stop()

@@ -1,7 +1,7 @@
 package graft.materialize
 
 import graft.core.LineageRow
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -119,9 +119,10 @@ object GraphMaterializer {
     * `ann_text` is the standoff content — `T` entity lines
     * (`T{n}\t{tag} {bgn} {end}\t{text}`) followed by `R` relation lines
     * (`R{n}\t{type} Arg1:{e1} Arg2:{e2}`), R-numbering per doc in natural
-    * key order (W2). Round-trips through BratParser (tested). */
-  def toAnn(mentions: DataFrame, triples: DataFrame): DataFrame = {
-    val tLines = mentions.select(col("doc_id"),
+    * key order (W2). `texts` holds the (doc_id, text) the mention offsets
+    * index; see [[bratOffsets]]. Round-trips through BratParser (tested). */
+  def toAnn(mentions: DataFrame, triples: DataFrame, texts: DataFrame): DataFrame = {
+    val tLines = bratOffsets(mentions, texts).select(col("doc_id"),
       struct(col("bgn"), col("mention_id")).as("ord"),
       concat_ws("\t", col("mention_id"),
         concat(col("tag"), lit(" "), col("bgn"), lit(" "), col("end")),
@@ -139,6 +140,22 @@ object GraphMaterializer {
       .agg(concat_ws("\n",
         transform(array_sort(collect_list(struct(col("ord"), col("line")))),
           s => s.getField("line"))).as("ann_text"))
+  }
+
+  /** `spans` with `bgn`/`end` in brat's unit: brat offsets count
+    * CODEPOINTS, the engine's count UTF-16 units of the doc text, and the
+    * two differ after an astral character. The codepoint offset of UTF-16
+    * offset `o` is the character count of the text's first 2·o UTF-16BE
+    * bytes. `texts` (doc_id, text) must hold every doc the spans name — a
+    * brat `.ann` is only valid next to its `.txt`; a span of a missing doc
+    * is not written. */
+  private def bratOffsets(spans: DataFrame, texts: DataFrame): DataFrame = {
+    val utf16 = encode(col("doc_text"), "UTF-16BE")
+    def codepoints(o: String): Column =
+      length(decode(utf16.substr(lit(1), col(o) * 2), "UTF-16BE"))
+    spans.join(texts.select(col("doc_id"), col("text").as("doc_text")), "doc_id")
+      .withColumn("bgn", codepoints("bgn"))
+      .withColumn("end", codepoints("end"))
   }
 
   /** The reference's per-output-file TSV header line
@@ -168,11 +185,12 @@ object GraphMaterializer {
     * standoff T lines — large_scale_explanation_pipeline.py:514-519, with
     * per-file numbering from 1 in example order, :370/:463):
     * `T{n}\tTrigger {bgn} {end}\t{text}`, n per doc over the natural pair
-    * key. Round-trips through BratParser (Trigger parses as an entity tag). */
-  def triggersToAnn(triggers: DataFrame): DataFrame = {
+    * key. `texts` as in [[toAnn]]. Round-trips through BratParser (Trigger
+    * parses as an entity tag). */
+  def triggersToAnn(triggers: DataFrame, texts: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("e1"), col("e2"), col("bgn"), col("end"))
-    triggers
+    bratOffsets(triggers, texts)
       .withColumn("tn", row_number().over(w))
       .select(col("doc_id"), col("tn"),
         concat_ws("\t", concat(lit("T"), col("tn")),

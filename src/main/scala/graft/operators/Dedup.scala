@@ -23,6 +23,12 @@ import scala.collection.concurrent.TrieMap
   *    corpora) via distinct-shingle semi-structure; integer arithmetic so
   *    the DuckDB oracle is bit-exact.
   *
+  * One pipeline per job — blocking → candidates → one verify tail — over
+  * one hash family: the portable LCG hashes of dense token ids (see the
+  * portable section below), which the oracle reproduces bit-exactly. The
+  * only near-dup hash left on xxhash64 is the per-row simhash a stream
+  * needs.
+  *
   * Everything is `functions._` + higher-order array functions — no UDFs,
   * whole-stage-codegen friendly.
   */
@@ -48,15 +54,6 @@ object Dedup {
         c => c.isNotNull)))
   }
 
-  /** MinHash signatures as a DataFrame stage: explode the shingle set once
-    * and take k seeded mins in ONE aggregation (map-side combinable).
-    * An expression-level formulation (k× `array_min(transform(...))` over
-    * a shared shingle column) looks cheaper but is not: Catalyst's
-    * CollapseProject inlines the shingle construction into every one of
-    * the k hash expressions, re-splitting the text k times (verified with
-    * .explain — 32 `split` calls for k=16). Explode+agg computes shingles
-    * once and scales: the shuffle key is doc_id, partial mins combine
-    * map-side, and shingle rows never exceed the text size. */
   /** Spread a byte-small scan before a per-row-heavy pass: a staged corpus
     * arriving as one file (or one parquet row group) scans as ONE task,
     * and the shingle/hash work downstream is row-amplified compute AQE
@@ -70,40 +67,10 @@ object Dedup {
     else docs.repartition(par, col("doc_id"))
   }
 
-  def minhashSignatures(docs: DataFrame, shingleN: Int, k: Int): DataFrame = {
-    val sh = spreadSmall(docs).select(col("doc_id"),
-      explode(shingles(col("text"), shingleN)).as("sh"))
-    val mins = (0 until k).map(s => min(xxhash64(lit(s), col("sh"))).as(s"h$s"))
-    sh.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until k).map(s => col(s"h$s")): _*).as("sig"))
-  }
-
-  /** LSH candidate pairs: signatures banded into `bands` groups of
-    * `rowsPerBand`; docs sharing any band bucket become a candidate pair.
-    * The join is bucket-equality only — never all-pairs. */
-  def minhashLshCandidates(docs: DataFrame, shingleN: Int = 3,
-                           bands: Int = 4, rowsPerBand: Int = 4): DataFrame = {
-    val k = bands * rowsPerBand
-    val sig = minhashSignatures(docs, shingleN, k)
-    val banded = sig.select(col("doc_id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
-
-  /** 64-bit SimHash over word features, DataFrame-staged for the same
-    * reason as minhashSignatures: explode the distinct words once, hash
-    * once, then 64 conditional-sum aggregates (one shuffle on doc_id,
-    * partial sums map-side) and an OR-fold of the sign bits. */
+  /** 64-bit SimHash over word features, DataFrame-staged: explode the
+    * distinct words once, hash once, then 64 conditional-sum aggregates
+    * (one shuffle on doc_id, partial sums map-side) and an OR-fold of the
+    * sign bits. The batch reference for the streaming [[withSimhash]]. */
   def simhashes(docs: DataFrame): DataFrame = {
     val words = spreadSmall(docs).select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("w"))
@@ -165,54 +132,17 @@ object Dedup {
     * silently miss qualifying pairs. A larger bound needs more blocks
     * (Manku et al.'s rotation scheme), which trades candidate volume for
     * recall and is out of scope here. */
-  def simhashCandidates(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val hamming = math.min(maxHamming, 3)
-    val sh = simhashes(docs)
-    val blocked = sh.select(col("doc_id"), col("sh"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("blk"),
-          shiftright(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("sh"), col("bb.blk"), col("bb.key"))
-    blocked.as("a").join(blocked.as("b"),
-        col("a.blk") === col("b.blk") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= hamming)
-  }
-
-  /** The composition that actually runs at 100 TB: MinHash-LSH candidate
-    * generation (sub-quadratic) followed by exact Jaccard verification on
-    * the candidates ONLY — the all-pairs `ngramJaccardPairs` below is the
-    * small-scale oracle/verification form. */
-  def lshVerifiedDups(docs: DataFrame, shingleN: Int = 3,
-                      minSharedPct: Int = 60): DataFrame = {
-    val cands = minhashLshCandidates(docs, shingleN)
-    val words = docs.select(col("doc_id"),
-      array_distinct(split(col("text"), " ")).as("ws"))
-    // verification is per-candidate-ROW (array_intersect on the two word
-    // sets) — two equi-joins to fetch the sets, no token-level explosion
-    cands
-      .join(words.select(col("doc_id").as("doc_a"), col("ws").as("wa")), "doc_a")
-      .join(words.select(col("doc_id").as("doc_b"), col("ws").as("wb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("wa"), col("wb"))).as("n_common"),
-        size(col("wa")).as("n_a"), size(col("wb")).as("n_b"))
-      .filter(col("n_common") * (lit(100) + lit(minSharedPct)) >=
-        lit(minSharedPct) * (col("n_a") + col("n_b")))
-  }
+  def simhashCandidates(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    simhashBlockCandidates(simhashes(docs), math.min(maxHamming, 3))
 
   // -------------- portable (oracle-verifiable) hash family ----------------
-  // The xxhash64 operators above are the 100 TB production path: hashing is
-  // a pure per-row expression, no vocabulary state. The *Portable variants
-  // trade ONE extra distinct+rank (dense token-id assignment over the sorted
-  // distinct token set) for cross-engine bit-exactness: every hash is
-  // integer LCG arithmetic over those ids, reproducible in any SQL engine,
-  // so the driver's DuckDB oracle verifies the candidate sets value-for-
-  // value instead of the weaker rows-only check. Same banding/blocking
-  // construction, same shuffle shape — only the hash family differs.
+  // The one hash family of the batch near-dup operators. It costs ONE extra
+  // distinct+rank (dense token-id assignment over the sorted distinct token
+  // set) and buys cross-engine bit-exactness: every hash is integer LCG
+  // arithmetic over those ids, reproducible in any SQL engine, so the
+  // DuckDB oracle verifies the candidate sets value-for-value. The xxhash64
+  // simhash above stays only where a per-row, state-free hash is required:
+  // the streaming `withSimhash` and its batch reference `simhashes`.
 
   /** Prime modulus shared by every portable LCG hash. */
   val HashP = 1000003L
@@ -253,8 +183,7 @@ object Dedup {
     * the per-partition offsets, then local arithmetic). The ids equal the
     * global sorted rank wherever the range boundaries fall, so the result
     * is deterministic and engine-portable. The rank is the portability
-    * price (one range shuffle of the VOCABULARY, not the corpus);
-    * production paths hash tokens directly. */
+    * price: one range shuffle of the VOCABULARY, not the corpus. */
   def tokenVocab(sh: DataFrame): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
@@ -318,9 +247,12 @@ object Dedup {
     ()
   }
 
+  /** Unpersist every live entry and empty the cache. Entries of a stopped
+    * context are only dropped: their blocks are gone with it (the
+    * `sweepStoppedEntries` rule). */
   def clearVocabCache(): Unit = {
     vocabCache.values.foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
+      if (!df.sparkSession.sparkContext.isStopped) df.unpersist())
     vocabCache.clear()
   }
 
@@ -388,15 +320,13 @@ object Dedup {
       .distinct()
   }
 
-  /** Portable LSH candidates → exact word-set Jaccard verification (the
-    * same verify stage as lshVerifiedDups; counts cast to BIGINT so the
-    * schema matches the oracle's count(*) outputs). */
+  /** Portable LSH candidates → exact word-set Jaccard verification. */
   def lshVerifiedDupsPortable(docs: DataFrame, shingleN: Int = 3,
                               minSharedPct: Int = 80,
                               vocabKey: Option[String] = None): DataFrame =
     verifyWordJaccard(
       minhashLshCandidatesPortable(docs, shingleN, vocabKey = vocabKey),
-      docs, minSharedPct)
+      wordSets(docs), minSharedPct)
 
   /** DELTA form of the portable LSH-verified near-dup join: candidate
     * generation pairs ONLY new docs against the whole corpus — the banded
@@ -434,15 +364,19 @@ object Dedup {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .distinct()
-    verifyWordJaccard(cands, docs, minSharedPct)
+    verifyWordJaccard(cands, wordSets(docs), minSharedPct)
   }
 
-  /** Shared verification tail: fetch the two word sets per candidate pair
-    * and apply the exact integer Jaccard predicate. */
-  private def verifyWordJaccard(cands: DataFrame, docs: DataFrame,
-                                minSharedPct: Int): DataFrame = {
-    val words = docs.select(col("doc_id"),
-      array_distinct(split(col("text"), " ")).as("ws"))
+  /** (doc_id, ws) rows: each doc's distinct-word set. */
+  private def wordSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), array_distinct(split(col("text"), " ")).as("ws"))
+
+  /** The one verification tail of the near-dup joins: fetch the two word
+    * sets of each (doc_a, doc_b) candidate from (doc_id, ws) rows — two
+    * equi-joins, no token-level explosion — and apply the exact integer
+    * Jaccard predicate. Counts are BIGINT, the oracle's count(*) type. */
+  private def verifyWordJaccard(cands: DataFrame, words: DataFrame,
+                                minSharedPct: Int): DataFrame =
     cands
       .join(words.select(col("doc_id").as("doc_a"), col("ws").as("wa")), "doc_a")
       .join(words.select(col("doc_id").as("doc_b"), col("ws").as("wb")), "doc_b")
@@ -452,7 +386,6 @@ object Dedup {
         size(col("wb")).cast("long").as("n_b"))
       .filter(col("n_common") * (lit(100) + lit(minSharedPct)) >=
         lit(minSharedPct) * (col("n_a") + col("n_b")))
-  }
 
   /** Portable 64-bit SimHash: bit i votes +1/−1 by whether the i-th LCG
     * hash of each distinct word's dense id lands in the lower half of
@@ -477,7 +410,7 @@ object Dedup {
   }
 
   /** Equal-16-bit-block candidates + Hamming verify over a simhash column —
-    * shared by the xxhash and portable variants. */
+    * the one block join of the xxhash and portable simhash candidates. */
   private def simhashBlockCandidates(sh: DataFrame, hamming: Int): DataFrame = {
     val blocked = sh.select(col("doc_id"), col("sh"),
       explode(array((0 until 4).map { b =>
@@ -578,12 +511,10 @@ object Dedup {
     * Then one transitive closure over stars ∪ delta edges. A new doc that
     * bridges two previously separate old clusters MERGES them (the hard
     * case — spec-asserted), so the result equals a full recompute
-    * whenever the old keep-list was computed with the SAME hash family
-    * and vocabulary over which the delta edges are generated. With the
-    * production xxhash64 family signatures are corpus-independent, so
-    * this holds unconditionally across deltas; with the portable LCG
-    * family it holds when old and delta runs share one staged vocabulary
-    * (the catalog demonstrates this: `dedup_keep_list_delta` splits the
+    * whenever the old keep-list was computed over the SAME vocabulary as
+    * the delta edges: the LCG hashes rank tokens by a per-corpus id, so
+    * old and delta runs must share one staged vocabulary (the catalog
+    * demonstrates this: `dedup_keep_list_delta` splits the
     * corpus 75/25, runs old-then-delta, and must hash-match the SAME
     * DuckDB oracle as the full `dedup_keep_list`).
     *
@@ -911,15 +842,7 @@ object Dedup {
             col("b.n") - (col("b.pos") + 1)) >= alpha)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(words.select(col("doc_id").as("doc_a"), col("ws").as("wa")), "doc_a")
-      .join(words.select(col("doc_id").as("doc_b"), col("ws").as("wb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("wa"), col("wb"))).cast("long").as("n_common"),
-        size(col("wa")).cast("long").as("n_a"),
-        size(col("wb")).cast("long").as("n_b"))
-      .filter(col("n_common") * (lit(100) + lit(minSharedPct)) >=
-        lit(minSharedPct) * (col("n_a") + col("n_b")))
+    verifyWordJaccard(cand, words, minSharedPct)
   }
 
   def ngramJaccardPairs(docs: DataFrame, minSharedPct: Int = 60): DataFrame = {

@@ -9,26 +9,20 @@ import org.apache.spark.sql.functions._
   *
   * Two tiers, as a 100 TB pipeline needs both:
   *  - brute-force cosine top-k — the exact baseline: one narrow pass
-  *    computing the score via `zip_with`+`aggregate` higher-order functions
-  *    (codegen'd, no UDF), then a global top-k (sort+limit; Spark plans
-  *    TakeOrderedAndProject — no full sort materialization).
-  *  - LSH-bucketed ANN — the scale path: random-hyperplane signs (same
-  *    family as SimHash) bucket vectors; the query probes only its own
-  *    bucket(s), touching a ~2^-bits fraction of the corpus.
+  *    computing the score with a fused codegen'd expression (no UDF), then
+  *    a global top-k (sort+limit; Spark plans TakeOrderedAndProject — no
+  *    full sort materialization).
+  *  - ANN — the scale path: integer random-hyperplane LSH buckets or IVF
+  *    cells; the query probes only a few of them, touching a small
+  *    fraction of the corpus.
   *
-  * An integer-quantized dot-product variant exists so correctness can be
-  * verified bit-exactly against a SQL oracle (float reductions are
-  * order-sensitive; ×1000-quantized BIGINT math is associative and exact).
+  * The hashing, pairing and ANN operators use one family: ×1000-quantized
+  * BIGINT arithmetic, which a SQL oracle verifies bit-exactly (float
+  * reductions are order-sensitive; integer math is associative and exact).
+  * Floats remain only in `bruteForceTopK` and the float IVF, the recall
+  * baselines the specs compare against.
   */
 object SimSearch {
-
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, v) => acc + v))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Exact cosine top-k against one query vector (broadcast as a literal
     * array — no join at all). Scoring uses the fused native expression
@@ -51,23 +45,6 @@ object SimSearch {
         quantized_dot(col("embedding"), qArr).as("qdot"))
       .orderBy(col("qdot").desc, col("vec_id"))
       .limit(k)
-  }
-
-  /** Random-hyperplane LSH bucket id: `bits` sign bits of dot products with
-    * seeded pseudo-random hyperplanes. Deterministic: hyperplane component
-    * h[b][i] derives from xxhash64(b, i) mapped to [-1, 1). */
-  def lshBucket(emb: Column, dim: Int, bits: Int): Column = {
-    val planeDots = (0 until bits).map { b =>
-      // deterministic pseudo-random plane: component from a hash, no RNG state
-      aggregate(
-        zip_with(emb,
-          sequence(lit(0), lit(dim - 1)),
-          (x, i) => x * (pmod(xxhash64(lit(b), i), lit(2000001L)).cast("double") / 1000000.0d - 1.0d)),
-        lit(0.0d), (acc, v) => acc + v)
-    }
-    planeDots.zipWithIndex.map { case (d, i) =>
-      when(d > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
   }
 
   // ---------- integer-exact (oracle-portable) quantized family ----------
@@ -249,12 +226,14 @@ object SimSearch {
   }
 
   // ---------- integer-quantized IVF (oracle-portable) ----------
-  // The float Lloyd trainer above stays as the API-parity variant; the
-  // quantized family below is bit-portable end to end: ×1000-floor BIGINT
-  // vectors, integer squared distances, strict-< argmin (lowest cell wins
-  // ties), floorDiv centroid means — every step exact integer arithmetic a
-  // SQL engine reproduces, so the WHOLE operator (training included) is
-  // oracle-verifiable like the rest of the quantized family.
+  // The float IVF above stays as a recall baseline: on the isotropic sf0.01
+  // embeddings (16 cells, nProbe 3) its recall@20 is 0.80 and the quantized
+  // form's 0.70, so only the float form carries the spec's 0.75 gate there.
+  // The quantized family below is bit-portable end to end: ×1000-floor
+  // BIGINT vectors, integer squared distances, strict-< argmin (lowest cell
+  // wins ties), floorDiv centroid means — every step exact integer
+  // arithmetic a SQL engine reproduces, so the WHOLE operator (training
+  // included) is oracle-verifiable like the rest of the quantized family.
 
   /** Integer-quantized Lloyd training. Deterministic: the sample is the
     * first `sampleN` rows by vec_id, init centroid c = sample(c mod n),
@@ -349,26 +328,5 @@ object SimSearch {
             col("qna").cast("double"))).desc,
         col("vec_id"))
       .limit(k)
-  }
-
-  /** Exact cosine near-dup PAIRS above a threshold, blocked by LSH bucket
-    * so the self-join is per-bucket only (the embedding analog of
-    * MinHash-LSH banding). */
-  def cosineNearDupPairs(emb: DataFrame, threshold: Double, bits: Int = 6): DataFrame = {
-    val e = emb.select(col("vec_id"),
-      transform(col("embedding"), _.cast("double")).as("v"))
-    // dim from the data — a hardcoded dim poisons the plane dots to null
-    // for other dimensions and collapses every row into one bucket
-    val firstRow = e.select(size(col("v"))).head(1)
-    if (firstRow.isEmpty) return e.sparkSession.emptyDataFrame
-      .select(lit(0L).as("vec_a"), lit(0L).as("vec_b"), lit(0.0d).as("score"))
-      .limit(0)
-    val dim = firstRow.head.getInt(0)
-    val b = e.withColumn("bucket", lshBucket(col("v"), dim, bits))
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        cosine_sim(col("a.v"), col("b.v")).as("score"))
-      .filter(col("score") >= threshold)
   }
 }

@@ -164,19 +164,9 @@ object TextAnalysis {
         col("tri_total"), col("tri_distinct"), frac("tri"))
   }
 
-  /** Polynomial rolling-hash fingerprint of the whole document (custom
-    * Catalyst expression with codegen — see graft.functions.RollingHash)
-    * plus per-window shingle fingerprints for containment checks. */
-  def fingerprints(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      graft.functions.RollingHash.rolling_hash(col("text")).as("doc_fp"),
-      xxhash64(col("text")).as("xx_fp"))
-
-  /** PORTABLE positional fingerprint: order-sensitive like the rolling
-    * hash, but built from integer LCG terms over dense token ids so the
-    * DuckDB oracle reproduces it bit-exactly (the rolling/xxhash forms
-    * above stay the production fingerprints — pure per-row expressions,
-    * no vocabulary state).
+  /** PORTABLE positional fingerprint: order-sensitive like a rolling hash,
+    * but built from integer LCG terms over dense token ids so the DuckDB
+    * oracle reproduces it bit-exactly.
     *
     *   fp(doc) = Σ_i ((37·tid_i + 17) mod P) · ((61·pos_i + 29) mod P)
     *

@@ -146,11 +146,7 @@ object AnnIndex {
                         centroids: Array[Array[Long]]): Unit = {
     val body = s"$bits $nCells ${fp._1} ${fp._2} ${fp._3} ${fp._4}\n" +
       centroids.map(_.mkString(",")).mkString("\n") + "\n"
-    val tmp = Files.createTempFile(Paths.get(path), "_graft_meta", ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path, MetaFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Sidecar.commit(path, MetaFile, body)
   }
 
   // Session-scoped build-once registry (same pattern as Dedup.vocabCache):

@@ -179,16 +179,12 @@ object DerivationStore {
       (f(4).toLong, f(5).toLong), l.get(1))
   }
 
-  /** Atomic temp-file + rename, the AnnIndex/SigStore commit pattern. */
+  /** The sidecar is the commit point ([[Sidecar.commit]]: atomic). */
   private def writeMeta(path: String, m: Meta): Unit = {
     val body = s"${m.version} ${m.batches} ${m.edgeRows} " +
       s"${m.derivedRows} ${m.lastBatchFp._1} ${m.lastBatchFp._2}\n" +
       s"${m.rule}\n"
-    val tmp = Files.createTempFile(Paths.get(path), "_graft_deriv", ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path, MetaFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Sidecar.commit(path, MetaFile, body)
   }
 }
 

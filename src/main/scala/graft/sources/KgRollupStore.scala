@@ -106,15 +106,11 @@ object KgRollupStore {
       (f(4).toLong, f(5).toLong))
   }
 
-  /** Atomic temp-file + rename, the AnnIndex/SigStore commit pattern. */
+  /** The sidecar is the commit point ([[Sidecar.commit]]: atomic). */
   private def writeMeta(path: String, m: Meta): Unit = {
     val body = s"${m.version} ${m.batches} ${m.rows} ${m.corpusXor} " +
       s"${m.lastBatchFp._1} ${m.lastBatchFp._2}\n"
-    val tmp = Files.createTempFile(Paths.get(path), "_graft_kg", ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path, MetaFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Sidecar.commit(path, MetaFile, body)
   }
 }
 

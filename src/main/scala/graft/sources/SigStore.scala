@@ -132,10 +132,6 @@ object SigStore {
                         sigRows: Long): Unit = {
     val body = s"$shingleN $k ${fp._1} ${fp._2} ${fp._3} ${fp._4} " +
       s"${vfp._1} ${vfp._2} $sigRows\n"
-    val tmp = Files.createTempFile(Paths.get(path), "_graft_meta", ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path, MetaFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Sidecar.commit(path, MetaFile, body)
   }
 }

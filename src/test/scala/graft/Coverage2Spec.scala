@@ -212,21 +212,6 @@ class Coverage2Spec extends AnyFunSuite {
     assert(out(3L) == ((2L, 0L, "gamma three\nunique line here")))
   }
 
-  test("LSH-verified dedup: every emitted pair meets the exact threshold") {
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "the quick brown fox jumps over the lazy dog"),
-      (3L, "the quick brown fox jumps over the lazy cat"),
-      (4L, "completely different content entirely here now")
-    ).toDF("doc_id", "text")
-    val verified = graft.operators.Dedup.lshVerifiedDups(docs, minSharedPct = 70)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(verified.contains((1L, 2L)), "exact dup must survive verification")
-    val exact = graft.operators.Dedup.ngramJaccardPairs(docs, minSharedPct = 70)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(verified.subsetOf(exact), "verification must never pass a below-threshold pair")
-  }
-
   test("stateful streaming dedup: first occurrence wins across micro-batches") {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft_sdedup").toString

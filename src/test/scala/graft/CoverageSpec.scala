@@ -108,7 +108,8 @@ class CoverageSpec extends AnyFunSuite {
       Mention("d9", "T2", "Protein", 9, 11, "BB", "nB", 0)).toDF()
     val triples = Seq(
       Triple("d9", "nA", "Complex_formation", "nB", "T1", "T2", 0.0, 2.0)).toDF()
-    val ann = GraphMaterializer.toAnn(mentions, triples).collect()
+    val ann = GraphMaterializer.toAnn(mentions, triples,
+      Seq(("d9", txt)).toDF("doc_id", "text")).collect()
     assert(ann.length == 1)
     val annText = ann.head.getAs[String]("ann_text")
     assert(annText ==
@@ -137,7 +138,8 @@ class CoverageSpec extends AnyFunSuite {
     val triggers = Seq(
       Trigger("d9", "T1", "T2", 3, 8, "binds", 2.0),
       Trigger("d9", "T1", "T3", 12, 15, "and", 1.0)).toDF()
-    val ann = GraphMaterializer.triggersToAnn(triggers).collect()
+    val ann = GraphMaterializer.triggersToAnn(triggers,
+      Seq(("d9", txt)).toDF("doc_id", "text")).collect()
     assert(ann.length == 1)
     val annText = ann.head.getAs[String]("ann_text")
     assert(annText == "T1\tTrigger 3 8\tbinds\nT2\tTrigger 12 15\tand")

@@ -99,7 +99,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("minhash signatures compute shingles once (no k-fold re-split)") {
     val docs = Queries.table(spark, dir, "documents")
-    val plan = graft.operators.Dedup.minhashSignatures(docs, 3, 16)
+    val plan = graft.operators.Dedup.minhashSignaturesPortable(docs, 3, 16)
       .queryExecution.optimizedPlan.toString
     // the single shingle construction mentions split() a few times (inside
     // transform + size); the broken form had 2 per hash = 32+ for k=16

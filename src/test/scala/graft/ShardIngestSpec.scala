@@ -41,7 +41,8 @@ class ShardIngestSpec extends AnyFunSuite {
     * line), each T line followed by its AnnotatorNotes STRING id. */
   def annByDoc(triples: DataFrame): Map[String, String] = {
     val mentions = gen.flatMap(_.goldMentions).toDF().withColumnRenamed("t_id", "mention_id")
-    val written = GraphMaterializer.toAnn(mentions, triples).as[(String, String)].collect().toMap
+    val written = GraphMaterializer.toAnn(mentions, triples, texts)
+      .as[(String, String)].collect().toMap
     docs.map { d =>
       val lines = written.getOrElse(d.doc_id, "").split('\n').filter(_.nonEmpty)
       val notes = lines.filter(_.startsWith("T")).zipWithIndex.map { case (line, i) =>
@@ -55,6 +56,8 @@ class ShardIngestSpec extends AnyFunSuite {
   }
 
   def txtOf(d: Doc): String = SentenceSplitter.docText(d)
+  /** (doc_id, text) of the generated docs: what the `.ann` offsets index. */
+  lazy val texts: DataFrame = docs.map(d => (d.doc_id, txtOf(d))).toDF("doc_id", "text")
 
   def docMembers(ids: Seq[String], ann: Map[String, String]): Members =
     docs.filter(d => ids.contains(d.doc_id))
@@ -98,7 +101,7 @@ class ShardIngestSpec extends AnyFunSuite {
       s"input/0000$k.tar.gz" -> (docMembers(ids.zipWithIndex.collect {
         case (id, i) if i % 3 == k => id }, inputAnn) ++ (if (k == 0) edgeCases else Nil))
     }
-    val triggerAnn = GraphMaterializer.triggersToAnn(out.triggers.toDF())
+    val triggerAnn = GraphMaterializer.triggersToAnn(out.triggers.toDF(), texts)
       .as[(String, String)].collect().toMap
     val corrupt = docMembers(ids.take(2), inputAnn) ++ Seq(
       "bad.txt" -> "ab", "bad.ann" -> "T1\tProtein 0 2\tZZ", // span text mismatch
@@ -140,6 +143,31 @@ class ShardIngestSpec extends AnyFunSuite {
     assert(golds.count(_.doc_id == "astral1") == 2)
     golds.foreach(m => assert(text(m.doc_id).substring(m.bgn, m.end) == m.text,
       s"${m.doc_id}/${m.t_id} at [${m.bgn}, ${m.end})"))
+  }
+
+  test(".ann writers emit codepoint offsets: an astral-prefixed doc round-trips") {
+    // "𝜀" is one codepoint but two UTF-16 units: the engine's ABC1 sits at
+    // 3..7, brat's at 2..6
+    val txt = "𝜀 ABC1 binds XYZ2."
+    val doc = Seq(("astral2", txt)).toDF("doc_id", "text")
+    val mentions = Seq(
+      Mention("astral2", "T1", "Protein", 3, 7, "ABC1", "nA", 0),
+      Mention("astral2", "T2", "Protein", 14, 18, "XYZ2", "nB", 0)).toDF()
+    val triples = Seq(
+      Triple("astral2", "nA", "Complex_formation", "nB", "T1", "T2", 0.0, 2.0)).toDF()
+    val ann = GraphMaterializer.toAnn(mentions, triples, doc).head().getString(1)
+    assert(ann.split('\n').take(2).toSeq ==
+      Seq("T1\tProtein 2 6\tABC1", "T2\tProtein 13 17\tXYZ2"))
+    val parsed = graft.ingest.BratParser.parse("astral2", ann, txt)
+    assert(parsed.mentions.map(m => (m.t_id, m.bgn, m.end, m.text)) ==
+      Seq(("T1", 3, 7, "ABC1"), ("T2", 14, 18, "XYZ2")))
+    assert(parsed.relations.map(r => (r.rel_type, r.arg1_norm, r.arg2_norm)) ==
+      Seq(("Complex_formation", "T1", "T2")))
+    val triggers = Seq(Trigger("astral2", "T1", "T2", 8, 13, "binds", 2.0)).toDF()
+    val tAnn = GraphMaterializer.triggersToAnn(triggers, doc).head().getString(1)
+    assert(tAnn == "T1\tTrigger 7 12\tbinds")
+    assert(graft.ingest.BratParser.parse("astral2", tAnn, txt).mentions
+      .map(m => (m.bgn, m.end, m.text)) == Seq((8, 13, "binds")))
   }
 
   test("AnnotatorNotes STRING ids are captured as norm_ids") {

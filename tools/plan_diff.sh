@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
-# Plan-identity check for a refactor of the lazy user-graph edge builders:
-# dumps their formatted physical plans (tools/PlanDump.scala) in a base
-# checkout and in a changed one, normalizes expression, plan and RDD ids,
-# and diffs. Exit status 0 and no diff output means the plans are identical.
+# Plan-identity check for a refactor of the lazy builders listed in
+# tools/PlanDump.scala (the user-graph edge builders and the Dedup near-dup
+# operators): dumps their formatted physical plans in a base checkout and in
+# a changed one, normalizes expression, plan and RDD ids, and diffs. Exit
+# status 0 and no diff output means the plans are identical.
 #
 # usage: tools/plan_diff.sh <baseCheckout> <changedCheckout> <sfDir> <workDir>
 # e.g.   mkdir -p /tmp/base && git archive <parent> | tar -x -C /tmp/base
@@ -18,8 +19,10 @@ for side in base change; do
     "set Test / unmanagedSources += file(\"$dump\")" \
     "Test/runMain graft.PlanDump $sf $work/$side.raw" >"$work/$side.log" 2>&1) \
     || { echo "PlanDump failed in $dir; see $work/$side.log" >&2; exit 2; }
-  # ids: expression #12, [plan_id=3], [id=#7], RDD ids like ExistingRDD[5]
+  # ids: expression #12, [plan_id=3], [id=#7], RDD ids like ExistingRDD[5],
+  # and the source line of an RDD's call site ("at map at Dedup.scala:266")
   sed -E -e 's/#[0-9]+/#N/g' -e 's/plan_id=[0-9]+/plan_id=N/g' \
-    -e 's/RDD\[[0-9]+\]/RDD[N]/g' "$work/$side.raw" >"$work/$side.txt"
+    -e 's/RDD\[[0-9]+\]/RDD[N]/g' -e 's/(\.scala):[0-9]+/\1:N/g' \
+    "$work/$side.raw" >"$work/$side.txt"
 done
 diff -u "$work/base.txt" "$work/change.txt"
