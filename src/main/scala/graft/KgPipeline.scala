@@ -19,18 +19,21 @@ import org.apache.spark.sql.functions._
   * the entire extract→encode→score path is ONE narrow pass per document —
   * doc text is tokenized once and every stage is a function of the in-hand
   * doc (the reference's per-doc loop, tf.py:293-434, without its process
-  * boundary). The only shuffles are:
+  * boundary). Each output family is a lazy projection of that pass; the
+  * only rows ever cached are the argmax positives (`run`'s `persistPass`),
+  * the rows the triples and the triggers both read. The only shuffles are:
   *   1. canonicalization (iterative self-joins over the tiny entity-edge
   *      Dataset, not the corpus);
   *   2. the node-table aggregation;
+  * plus a broadcast each for the dictionary automaton and the canonical
+  * map. Nothing ever collects mention- or pair-level data off the executors.
+  *
   * Triples are intentionally NOT deduplicated here: the reference writes
   * every positive prediction row (one per sentence context —
   * tf.py:400-407), and duplicates collapse only at evaluation time, where
   * Evalsorel keys on the canonical (doc, type, args) set. A doc with the
   * same pair positive in two sentences therefore emits two triple rows,
   * and metrics' positive_triples counts rows, not distinct triples.
-  * plus a broadcast each for the dictionary automaton and the canonical
-  * map. Nothing ever collects mention- or pair-level data to the driver.
   */
 object KgPipeline {
 
@@ -50,16 +53,11 @@ object KgPipeline {
     lazy val pairs: Seq[CandidatePair] = PairGenerator.forDoc(mentions, config)
     lazy val tokens: IndexedSeq[Token] = Tokenizer.tokenize(SentenceSplitter.docText(doc))
 
-    /** F5 window fit, one geometry per pair: the fitted pairs, and the
-      * unfitted ones with their token distance (the FN side output). */
-    lazy val (fitted, unfitted) = {
-      val in = Vector.newBuilder[CandidatePair]
-      val out = Vector.newBuilder[(CandidatePair, Int)]
-      pairs.foreach { p =>
-        val (_, _, _, _, dist, fits) = WindowEncoder.geometry(tokens, p, config.maxSeqLen)
-        if (fits) in += p else out += ((p, dist))
-      }
-      (in.result(), out.result())
+    /** F5 window fit, one geometry per pair: the pairs that do not fit,
+      * with their token distance (the FN side output). */
+    lazy val unfitted: Seq[(CandidatePair, Int)] = pairs.flatMap { p =>
+      val (_, _, _, _, dist, fits) = WindowEncoder.geometry(tokens, p, config.maxSeqLen)
+      if (fits) None else Some((p, dist))
     }
 
     /** Encoded windows of every pair under `strategy` (MASK_EVERYTHING or
@@ -68,18 +66,17 @@ object KgPipeline {
       if (pairs.isEmpty) Nil
       else WindowEncoder.encodeDocWith(strategy)(tokens, pairs, mentions, config.maxSeqLen)
 
-    /** Scores of `candidates` (every pair by default: the scorer skips
-      * unfitted ones itself). The encoded window is DROPPED from negative
-      * rows before they cross the Dataset row boundary: windows are only
-      * consumed by trigger detection, which is gated on positives (F6).
-      * Without this, every candidate pair would serialize a ~128-element
-      * string array into Tungsten rows — at 10⁶ pairs per million docs
-      * that turns the narrow pass from CPU-bound extraction into
-      * allocation/GC churn (measured 2-3× wall-clock on the bench box). */
-    def scored(scorer: RelationScorer,
-               candidates: Seq[CandidatePair] = pairs): Iterator[ScoredPair] =
-      if (candidates.isEmpty) Iterator.empty
-      else scorer.scoreDoc(tokens, mentions, candidates, config.maxSeqLen).map { sp =>
+    /** Scores of the pairs (the scorer skips unfitted ones itself). The
+      * encoded window is DROPPED from negative rows before they cross the
+      * Dataset row boundary: windows are only consumed by trigger
+      * detection, which is gated on positives (F6). Without this, every
+      * candidate pair would serialize a ~128-element string array into
+      * Tungsten rows — at 10⁶ pairs per million docs that turns the narrow
+      * pass from CPU-bound extraction into allocation/GC churn (measured
+      * 2-3× wall-clock on the bench box). */
+    def scored(scorer: RelationScorer): Iterator[ScoredPair] =
+      if (pairs.isEmpty) Iterator.empty
+      else scorer.scoreDoc(tokens, mentions, pairs, config.maxSeqLen).map { sp =>
         if (isPositive(sp)) sp else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
       }
   }
@@ -114,28 +111,6 @@ object KgPipeline {
     perDoc(docs, dict, config)(_.scored(scorer))
   }
 
-  /** The SINGLE fused extraction pass: one scan over the corpus emits a
-    * tagged union of scored pairs (kind 0, windows only on positives),
-    * unfitted-pair statistics (kind 1, geometry-only), and mention rows for
-    * the node table (kind 2). Every downstream output derives from this
-    * Dataset — without the fusion, scored/unfitted/node consumers would
-    * each re-run sentence split + automaton scan + pair generation over
-    * the whole corpus (3× the dominant stage's compute). */
-  def extractAll(docs: Dataset[Doc], dict: Broadcast[AhoCorasick],
-                 scorer: RelationScorer, config: TaskConfig)
-                (implicit spark: SparkSession): Dataset[PassRow] = {
-    import spark.implicits._
-    perDoc(docs, dict, config) { x =>
-      x.mentions.iterator.map(m =>
-        PassRow(2, null, m.doc_id, null, null, null, null, 0, 0, m.norm_id, m.text)) ++
-        x.unfitted.iterator.map { case (p, dist) =>
-          PassRow(1, null, p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, dist, null, null)
-        } ++
-        x.scored(scorer, x.fitted).map(sp =>
-          PassRow(0, sp, sp.doc_id, null, null, null, null, 0, 0, null, null))
-    }
-  }
-
   /** Argmax-positive scored rows as canonical triples: both mention norms
     * mapped through `canonMap`, the unordered pair written subj ≤ obj. The
     * one triple builder — batch `run` and `StreamingIngest.triples` (a
@@ -155,11 +130,14 @@ object KgPipeline {
   }
 
   /** Full prediction pipeline. `equivEdges` is the (small) global
-    * cross-reference/alias edge set driving canonicalization.
-    * @param persistPass cache the fused pass so its three consumer families
-    *        (triples/triggers, unfitted stats, node table) share ONE corpus
-    *        scan. Disable for triples-only consumers that never touch the
-    *        other outputs (they'd pay for materializing rows they drop). */
+    * cross-reference/alias edge set driving canonicalization. Every output
+    * is a lazy narrow pass over the corpus; only the argmax positives are
+    * ever cached.
+    * @param persistPass cache the positive scored rows (windows included),
+    *        which the triples and the triggers both read, so an all-outputs
+    *        job (RunJob) scores the corpus once. The flag decides only that
+    *        `persist`: the plan is the same either way. Leave it off for
+    *        triples-only consumers, which read the positives once. */
   def run(docs: Dataset[Doc], dictEntries: Seq[DictEntry],
           equivEdges: Dataset[EquivEdge], scorer: RelationScorer,
           config: TaskConfig = TaskConfig.complexTome,
@@ -170,32 +148,15 @@ object KgPipeline {
     val (good, quarantine) = DocValidator.split(docs)
     val dict = MentionDetector.broadcastDict(spark, dictEntries)
 
-    // Two physical strategies behind identical semantics:
-    //  - persistPass=true: ONE fused scan, cached; all output families
-    //    share it (the all-outputs job shape, e.g. RunJob).
-    //  - persistPass=false: each output is its own lazy narrow pass —
-    //    consumers that never touch unfitted/nodes never pay for them, and
-    //    the triples path doesn't serialize mention rows it would discard
-    //    (a typed flatMap blocks filter pushdown, so a shared UNcached
-    //    pass would materialize every PassRow kind for every consumer).
-    val (scored, unfitted, mentionNorms) =
-      if (persistPass) {
-        val pass = extractAll(good, dict, scorer, config)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (pass.filter((r: PassRow) => r.kind == 0).map(_.scored),
-          pass.filter((r: PassRow) => r.kind == 1).toDF()
-            .select($"doc_id", $"e1", $"e2", $"e1_norm", $"e2_norm",
-              $"sent_dist", $"tokenDistance"),
-          pass.filter((r: PassRow) => r.kind == 2).toDF()
-            .select($"norm_id", $"surface"))
-      } else {
-        (scoreCandidates(good, dict, scorer, config),
-          perDoc(good, dict, config)(_.unfitted.map { case (p, dist) =>
-            (p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, dist)
-          }).toDF("doc_id", "e1", "e2", "e1_norm", "e2_norm", "sent_dist", "tokenDistance"),
-          perDoc(good, dict, config)(_.mentions.map(m => (m.norm_id, m.text)))
-            .toDF("norm_id", "surface"))
-      }
+    // Each output family is its own projection of the per-doc extraction:
+    // the node pass never builds pairs, and consumers that never touch
+    // unfitted/nodes never pay for them.
+    val scored = scoreCandidates(good, dict, scorer, config)
+    val unfitted = perDoc(good, dict, config)(_.unfitted.map { case (p, dist) =>
+      (p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, dist)
+    }).toDF("doc_id", "e1", "e2", "e1_norm", "e2_norm", "sent_dist", "tokenDistance")
+    val mentionNorms = perDoc(good, dict, config)(_.mentions.map(m => (m.norm_id, m.text)))
+      .toDF("norm_id", "surface")
 
     // canonical map from the global equivalence edges (J6); tiny vs corpus
     val canonMap = ConnectedComponents.canonicalizeAuto(equivEdges)
@@ -203,7 +164,12 @@ object KgPipeline {
     // F7: only argmax-positive rows materialize as triples; all scored rows
     // remain available (the reference writes every row to TSV, positives
     // additionally to .ann — tf.py:405-407)
-    val positives = scored.filter(isPositive _)
+    // With persistPass the triples and the triggers share one scoring scan
+    // through a cache of the positives alone (~2.5% of the scored pairs).
+    val positives = {
+      val p = scored.filter(isPositive _)
+      if (persistPass) p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p
+    }
     val triples = canonicalTriples(positives, canonMap)
 
     val triggers = positives.flatMap(TriggerDetector.triggersFor _)

@@ -3,8 +3,8 @@ package graft
 import graft.core._
 import graft.materialize.GraphMaterializer
 import graft.score.LexiconScorer
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Production job entry point (spark-submit shape):
   *
@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions.col
   * unreadable, or lacks the (src, dst) columns, fails the job.
   *
   * Writes (all Iceberg-shaped bucketed parquet with lineage — re-running
-  * after a crash resumes exactly at the incomplete buckets):
+  * after a crash with the same nBuckets resumes exactly at the incomplete
+  * buckets; another nBuckets is refused):
   *   <outDir>/triples   <outDir>/nodes   <outDir>/triggers
   *   <outDir>/quarantine (plain)  and prints one metrics JSON line.
   */
@@ -43,28 +44,27 @@ object RunJob {
             else spark.emptyDataset[EquivEdge])
       }
 
-    // all three output families are written — persist the fused pass so
-    // they share one corpus scan
+    // persist the positives, the only rows two writers (triples, triggers)
+    // read; the node pass stays a lazy scan of its own
     val out = KgPipeline.run(docs, dict, edges, LexiconScorer.default,
       persistPass = true)
-    val wroteTriples = GraphMaterializer.writeResumable(
-      spark, out.triples.toDF(), s"$outDir/triples", nBuckets)
-    val wroteNodes = GraphMaterializer.writeResumable(
-      spark, out.nodes, s"$outDir/nodes", nBuckets, key = "node_id")
-    val wroteTriggers = GraphMaterializer.writeResumable(
-      spark, out.triggers.toDF(), s"$outDir/triggers", nBuckets)
-    out.quarantine.toDF().write.mode("overwrite").parquet(s"$outDir/quarantine")
+    val wroteTriples = GraphMaterializer.write(spark, out.triples.toDF(), s"$outDir/triples", nBuckets)
+    val wroteNodes = GraphMaterializer.write(spark, out.nodes, s"$outDir/nodes", nBuckets, key = "node_id")
+    val wroteTriggers = GraphMaterializer.write(spark, out.triggers.toDF(), s"$outDir/triggers", nBuckets)
+    // the quarantine count rides on its own write: no second validation pass
+    val quarantined = Observation("quarantine")
+    out.quarantine.observe(quarantined, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$outDir/quarantine")
 
-    // metrics from the LINEAGE aggregates — three tiny metadata reads, not
-    // three post-write full scans of the freshly written tables
+    // counts as each write left them: no table or lineage is re-read
     Map(
-      "triples" -> GraphMaterializer.lineageRowCount(spark, s"$outDir/triples"),
-      "nodes" -> GraphMaterializer.lineageRowCount(spark, s"$outDir/nodes"),
-      "triggers" -> GraphMaterializer.lineageRowCount(spark, s"$outDir/triggers"),
-      "quarantined" -> out.quarantine.count(),
-      "buckets_written_triples" -> wroteTriples,
-      "buckets_written_nodes" -> wroteNodes,
-      "buckets_written_triggers" -> wroteTriggers)
+      "triples" -> wroteTriples.rows,
+      "nodes" -> wroteNodes.rows,
+      "triggers" -> wroteTriggers.rows,
+      "quarantined" -> quarantined.get("n").asInstanceOf[Long],
+      "buckets_written_triples" -> wroteTriples.buckets,
+      "buckets_written_nodes" -> wroteNodes.buckets,
+      "buckets_written_triggers" -> wroteTriggers.buckets)
   }
 
   def main(args: Array[String]): Unit = {
@@ -154,8 +154,7 @@ object CurationJob {
     }
     val keep = graft.operators.Dedup.keepList(docs,
       minSharedPct = config.minSharedPct)
-    val wroteKeep = GraphMaterializer.writeResumable(
-      spark, keep, s"$outDir/keep_list", nBuckets)
+    val wroteKeep = GraphMaterializer.write(spark, keep, s"$outDir/keep_list", nBuckets)
     // the signature store rides along with the keep-list: tomorrow's
     // delta run primes its vocab cache from <out>/signatures/_vocab
     // (Dedup.primeVocabCache + SigStore.loadVocab), reads the signatures
@@ -174,22 +173,21 @@ object CurationJob {
     val packed = Queries.curationPipelineOver(docs, evalSet,
       config.copy(lineDedupMinDocs = None),
       precomputedKeepList = Some(keep))
-    val wrotePacked = GraphMaterializer.writeResumable(
-      spark, packed, s"$outDir/packed", nBuckets)
+    val wrotePacked = GraphMaterializer.write(spark, packed, s"$outDir/packed", nBuckets)
     // reporting rollup only when the corpus carries the grouping columns
     if (Seq("lang", "source").forall(raw.columns.contains))
       Queries.corpusStatsOver(raw)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$outDir/stats")
     Map(
-      "keep_list" -> GraphMaterializer.lineageRowCount(spark, s"$outDir/keep_list"),
-      "packed" -> GraphMaterializer.lineageRowCount(spark, s"$outDir/packed"),
+      "keep_list" -> wroteKeep.rows,
+      "packed" -> wrotePacked.rows,
       // row count from the store's meta sidecar — no re-scan of the
       // freshly written table (same policy as the lineage counts above)
       "signatures" -> graft.sources.SigStore
         .storedRows(s"$outDir/signatures").getOrElse(-1L),
-      "buckets_written_keep_list" -> wroteKeep,
-      "buckets_written_packed" -> wrotePacked)
+      "buckets_written_keep_list" -> wroteKeep.buckets,
+      "buckets_written_packed" -> wrotePacked.buckets)
   }
 
   def main(args: Array[String]): Unit = {

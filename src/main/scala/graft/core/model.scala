@@ -103,13 +103,3 @@ case class LineageRow(bucket: Int, n_docs: Long, n_triples: Long,
 
 /** A document quarantined by ingest validation (SURVEY.md S2/X1). */
 case class QuarantineRow(doc_id: String, reason: String)
-
-/** One row of the pipeline's single fused extraction pass — a tagged union
-  * so scored pairs, unfitted-pair statistics, and mention rows all come out
-  * of ONE scan over the corpus (kind: 0 = scored, 1 = unfitted, 2 =
-  * mention). Fields irrelevant to a kind are null/0. */
-case class PassRow(kind: Int, scored: ScoredPair,
-                   doc_id: String, e1: String, e2: String,
-                   e1_norm: String, e2_norm: String,
-                   sent_dist: Int, tokenDistance: Int,
-                   norm_id: String, surface: String)

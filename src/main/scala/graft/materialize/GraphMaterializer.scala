@@ -1,9 +1,12 @@
 package graft.materialize
 
 import graft.core.LineageRow
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Graph materialization + lineage/resume (SURVEY.md S5-S9, W2; §7.1
   * modules 8 & 10).
@@ -15,22 +18,22 @@ import org.apache.spark.sql.functions._
   * Resume contract (the engine analog of the reference's per-shard
   * skip-on-error + `.err.log` fault isolation,
   * large_scale_prediction_pipeline_tf.py:202-236, :273-286):
-  *  - output rows are bucketed by `pmod(hash(doc_id), nBuckets)`;
+  *  - output rows are bucketed by `pmod(hash(key), nBuckets)`; the layout
+  *    is recorded in `<table>/_layout` before the first data commit, and a
+  *    write under another (or an unrecorded) layout is refused;
   *  - one Spark job writes all pending buckets via dynamic partition
-  *    overwrite (idempotent under retry — a re-run of a bucket replaces it
-  *    byte-for-byte, never duplicates);
+  *    overwrite; a `rebalance` hint on the bucket sends each bucket to one
+  *    writer, so a bucket is one file, not one per input partition — a
+  *    re-run of a bucket replaces it in full;
   *  - lineage rows (bucket, counts, status) are appended only AFTER the
   *    data commit, so a crash between data and lineage re-processes the
   *    bucket — safe because the overwrite is idempotent;
-  *  - on restart, buckets already marked ok are anti-joined away from the
-  *    input: exact resume with no driver-side loop over buckets.
+  *  - on restart the lineage (≤ nBuckets rows per run) is collected once,
+  *    and its ok buckets are filtered out of the input by value.
   */
 object GraphMaterializer {
 
   val BucketCol = "graft_bucket"
-
-  def withBucket(df: DataFrame, nBuckets: Int, key: String = "doc_id"): DataFrame =
-    df.withColumn(BucketCol, pmod(hash(col(key)), lit(nBuckets)))
 
   private def lineagePath(table: String) = s"$table/_lineage"
 
@@ -39,27 +42,76 @@ object GraphMaterializer {
     * a corrupt or unreadable one fails, never reads as "nothing done". */
   private def readLineage(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(lineagePath(table))
+    val p = new Path(lineagePath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
       spark.read.schema(Encoders.product[LineageRow].schema).parquet(p.toString)
     else Seq.empty[LineageRow].toDF()
   }
 
-  /** Buckets recorded ok in a table's lineage (empty frame if none yet). */
-  def completedBuckets(spark: SparkSession, table: String): DataFrame =
-    readLineage(spark, table)
-      .filter(col("status") === "ok").select(col("bucket")).distinct()
+  /** Row count of each bucket recorded ok in a table's lineage, in one
+    * collect. A bucket re-processed after a crash between data commit and
+    * lineage append re-appends the same idempotent counts, so duplicates
+    * collapse with max. */
+  private def okBucketRows(spark: SparkSession, table: String): Map[Int, Long] =
+    readLineage(spark, table).as(Encoders.product[LineageRow]).collect().toSeq
+      .filter(_.status == "ok").groupMapReduce(_.bucket)(_.n_triples)(math.max)
 
-  /** Write `df` (must carry doc_id) bucketed, skipping buckets whose
-    * lineage row says ok; append lineage for newly written buckets.
-    * @return number of buckets written this invocation */
-  def writeResumable(spark: SparkSession, df: DataFrame, table: String,
-                     nBuckets: Int = 32, key: String = "doc_id"): Long = {
+  /** Refuses a write whose bucket layout differs from the table's record
+    * in `<table>/_layout` (its buckets would hold two hash layouts), or to
+    * a table with lineage but no record (its layout is unknown). A new
+    * table's record is committed by a rename on its own file system. */
+  private def claimLayout(spark: SparkSession, table: String, nBuckets: Int,
+                          key: String, recorded: Iterable[Int]): Unit = {
+    val want = s"nBuckets=$nBuckets key=$key"
+    val file = new Path(table, "_layout")
+    val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(file)) {
+      val in = fs.open(file)
+      val have = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      if (have != want) throw new IllegalStateException(
+        s"$table was written with layout [$have]; refusing to resume it with " +
+          s"[$want], which would mix two bucket layouts in one table")
+    } else if (recorded.nonEmpty) throw new IllegalStateException(
+      s"$table has lineage but no layout record; refusing to resume it with " +
+        s"[$want] (if it was written with [$want], put that line in $file)")
+    else {
+      val tmp = new Path(table, s"_layout.${java.util.UUID.randomUUID}.tmp")
+      val out = fs.create(tmp, false)
+      try out.write(want.getBytes(UTF_8)) finally out.close()
+      require(fs.rename(tmp, file), s"could not commit the layout record $file")
+    }
+  }
+
+  /** Buckets recorded ok in a table's lineage. Kept for perfbench and the
+    * tests; the writer itself reads them with the counts, in one collect. */
+  def completedBuckets(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val done = completedBuckets(spark, table)
-    val pending = withBucket(df, nBuckets, key)
-      .join(done.withColumnRenamed("bucket", BucketCol), Seq(BucketCol), "left_anti")
+    okBucketRows(spark, table).keys.toSeq.toDF("bucket")
+  }
+
+  /** What one resumable write did: the buckets it wrote, and the table's
+    * cumulative row count after it (what [[lineageRowCount]] reads). */
+  final case class Written(buckets: Long, rows: Long)
+
+  /** [[write]], returning only the number of buckets written. Kept only
+    * for perfbench and the tests, which compile against it. */
+  def writeResumable(spark: SparkSession, df: DataFrame, table: String,
+                     nBuckets: Int = 32, key: String = "doc_id"): Long =
+    write(spark, df, table, nBuckets, key).buckets
+
+  /** Write `df` (must carry `key`) bucketed, skipping buckets whose
+    * lineage row says ok; append lineage for newly written buckets. The
+    * table's cumulative row count is summed from the lineage rows it
+    * collected and the ones it appended — no re-read of either. */
+  def write(spark: SparkSession, df: DataFrame, table: String,
+            nBuckets: Int = 32, key: String = "doc_id"): Written = {
+    import spark.implicits._
+    val done = okBucketRows(spark, table)
+    claimLayout(spark, table, nBuckets, key, done.keys)
+    val pending = df.withColumn(BucketCol, pmod(hash(col(key)), lit(nBuckets)))
+      .filter(!col(BucketCol).isin(done.keys.toSeq: _*))
+      .hint("rebalance", col(BucketCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // per-write option, NOT a session conf mutation: a session-level
@@ -76,29 +128,20 @@ object GraphMaterializer {
         .groupBy(col(BucketCol).as("bucket"))
         .agg(countDistinct(col(key)).as("n_docs"), count(lit(1)).as("n_triples"))
         .withColumn("status", lit("ok")).withColumn("error", lit(""))
-      val n = lineage.count()
-      if (n > 0) lineage.write.mode(SaveMode.Append).parquet(lineagePath(table))
-      n
+        .as[LineageRow].collect().toSeq
+      if (lineage.nonEmpty)
+        lineage.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(lineagePath(table))
+      Written(lineage.length, done.values.sum + lineage.map(_.n_triples).sum)
     } finally pending.unpersist()
   }
 
   def readTable(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(s"$table/data").drop(BucketCol)
 
-  /** Cumulative row count of a table from its LINEAGE — one tiny metadata
-    * read, never a re-scan of `<table>/data` (at 100 TB a post-write
-    * count() is another full pass over every bucket ever written; the
-    * lineage aggregate already has the numbers). One ok row per completed
-    * bucket; a bucket re-processed after a crash between data commit and
-    * lineage append re-appends the same idempotent counts, so duplicates
-    * collapse with max. */
-  def lineageRowCount(spark: SparkSession, table: String): Long = {
-    import spark.implicits._
-    readLineage(spark, table)
-      .filter($"status" === "ok")
-      .groupBy($"bucket").agg(max($"n_triples").as("n"))
-      .agg(coalesce(sum($"n"), lit(0L))).as[Long].head()
-  }
+  /** Cumulative row count of a table from its LINEAGE — one tiny read,
+    * never a re-scan of `<table>/data` (at 100 TB, another full pass). */
+  def lineageRowCount(spark: SparkSession, table: String): Long =
+    okBucketRows(spark, table).values.sum
 
   /** TSV export with the reference's per-file sequential ids (W2):
     * `R{n}` assigned by row_number over (doc_id) ordered by the natural key

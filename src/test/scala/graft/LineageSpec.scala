@@ -110,4 +110,75 @@ class LineageSpec extends AnyFunSuite {
     assert(GraphMaterializer.completedBuckets(spark, crashed).count() == 0)
     assert(GraphMaterializer.writeResumable(spark, data(100), crashed, nBuckets = 4) == 4)
   }
+
+  test("a fresh write leaves one data file per bucket; a resume returns the lineage count") {
+    import scala.reflect.io.Directory
+    val table = freshTable()
+    assert(GraphMaterializer.writeResumable(spark, data(300), table, nBuckets = 8) == 8)
+    val bucketDirs = new java.io.File(s"$table/data").listFiles()
+      .filter(_.getName.startsWith(GraphMaterializer.BucketCol))
+    assert(bucketDirs.length == 8)
+    bucketDirs.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(files.length == 1, s"${d.getName} holds ${files.mkString(", ")}")
+    }
+
+    // a crash after buckets 0-3 were recorded: 4-7 lose lineage and data
+    val kept = spark.read.parquet(s"$table/_lineage").filter(col("bucket") < 4)
+      .as[core.LineageRow].collect().toSeq
+    new Directory(new java.io.File(s"$table/_lineage")).deleteRecursively()
+    kept.toDS().write.parquet(s"$table/_lineage")
+    (4 until 8).foreach(b =>
+      new Directory(new java.io.File(s"$table/data/${GraphMaterializer.BucketCol}=$b")).deleteRecursively())
+    val resumed = GraphMaterializer.write(spark, data(300), table, nBuckets = 8)
+    assert(resumed.buckets == 4)
+    assert(resumed.rows == 300 && resumed.rows == GraphMaterializer.lineageRowCount(spark, table))
+  }
+
+  test("resume under a different bucket layout is refused, naming both layouts") {
+    val table = freshTable()
+    assert(GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4) == 4)
+    val e = intercept[IllegalStateException] {
+      GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 8)
+    }
+    assert(e.getMessage.contains("nBuckets=4 key=doc_id") &&
+      e.getMessage.contains("nBuckets=8 key=doc_id"), e.getMessage)
+    intercept[IllegalStateException] {
+      GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4, key = "subj")
+    }
+    // the refused writes changed nothing; the original layout resumes
+    assert(GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4) == 0)
+    assert(GraphMaterializer.readTable(spark, table).count() == 100)
+  }
+
+  test("the layout record sits in the table on its own file system, URI paths too") {
+    val dir = Files.createTempDirectory("graft_lineage")
+    val table = dir.toUri.toString + "triples"
+    assert(table.startsWith("file:"))
+    assert(GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4) == 4)
+    assert(Files.readString(dir.resolve("triples/_layout")) == "nBuckets=4 key=doc_id")
+    intercept[IllegalStateException] {
+      GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 8)
+    }
+    assert(GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4) == 0)
+  }
+
+  test("a table with lineage but no layout record is refused until the record is put back") {
+    val table = freshTable()
+    assert(GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4) == 4)
+    val layout = java.nio.file.Paths.get(table, "_layout")
+    val body = Files.readString(layout)
+    Files.delete(layout)
+    Files.deleteIfExists(java.nio.file.Paths.get(table, "._layout.crc"))
+    Seq(4, 8).foreach { n =>
+      val e = intercept[IllegalStateException] {
+        GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = n)
+      }
+      assert(e.getMessage.contains("no layout record") &&
+        e.getMessage.contains(s"nBuckets=$n key=doc_id"), e.getMessage)
+    }
+    Files.writeString(layout, body)
+    assert(GraphMaterializer.writeResumable(spark, data(100), table, nBuckets = 4) == 0)
+    assert(GraphMaterializer.readTable(spark, table).count() == 100)
+  }
 }

@@ -76,6 +76,20 @@ class PipelineSpec extends AnyFunSuite {
     g.unpersist()
   }
 
+  test("persistPass caches only the positives: triples and triggers read them, nothing else") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val p = params.copy(nDocs = 60)
+    val o = KgPipeline.run(CorpusGen.docs(CorpusGen.generate(spark, p)), CorpusGen.dictionary(p),
+      spark.createDataset(CorpusGen.equivEdges(p)), LexiconScorer.default, persistPass = true)
+    def readsCache(ds: org.apache.spark.sql.Dataset[_]): Boolean =
+      ds.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }.nonEmpty
+    assert(readsCache(o.triples) && readsCache(o.triggers),
+      "the triples and the triggers must read the cached positives")
+    Seq("unfitted" -> o.unfitted, "nodes" -> o.nodes, "scoredAll" -> o.scoredAll).foreach {
+      case (name, ds) => assert(!readsCache(ds), s"$name must stay a lazy pass")
+    }
+  }
+
   test("a valid doc ending in a null-text media span runs through the pipeline") {
     // DocValidator accepts a media span with null text; docText must size
     // the buffer from it without dereferencing the null

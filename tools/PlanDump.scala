@@ -14,7 +14,10 @@ import java.nio.file.{Files, Paths}
   *  - the near-dup operators of `Dedup` on the `documents` table
   *    (`lshVerifiedDupsPortable`, `lshVerifiedDupsPortableDelta` with every
   *    fourth doc new, `ngramJaccardPairsPrefix`, `simhashCandidates`,
-  *    `simhashCandidatesPortable`), uncached (no vocabulary key).
+  *    `simhashCandidatesPortable`), uncached (no vocabulary key);
+  *  - the lazy KG pipeline (`KgPipeline.run` with `persistPass = false`,
+  *    the graded headline's path) through `Queries.kgPipelineTriples` and
+  *    `Queries.kgNodes`.
   * Compiled into the test classpath by
   * `tools/plan_diff.sh`, which runs it on two checkouts and diffs the
   * id-normalized output.
@@ -37,7 +40,9 @@ object PlanDump {
         docs, docs.filter(col("doc_id") % 4 === 0).select(col("doc_id")))),
       "ngramJaccardPairsPrefix" -> (() => Dedup.ngramJaccardPairsPrefix(docs)),
       "simhashCandidates" -> (() => Dedup.simhashCandidates(docs)),
-      "simhashCandidatesPortable" -> (() => Dedup.simhashCandidatesPortable(docs)))
+      "simhashCandidatesPortable" -> (() => Dedup.simhashCandidatesPortable(docs)),
+      "kgPipelineTriples" -> (() => Queries.kgPipelineTriples(spark, sfDir)),
+      "kgNodes" -> (() => Queries.kgNodes(spark, sfDir)))
     val buf = new ByteArrayOutputStream()
     val out = new PrintStream(buf, true, "UTF-8")
     for ((name, df) <- builders) {

@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
 # Plan-identity check for a refactor of the lazy builders listed in
-# tools/PlanDump.scala (the user-graph edge builders and the Dedup near-dup
-# operators): dumps their formatted physical plans in a base checkout and in
-# a changed one, normalizes expression, plan and RDD ids, and diffs. Exit
-# status 0 and no diff output means the plans are identical.
+# tools/PlanDump.scala (the user-graph edge builders, the Dedup near-dup
+# operators and the lazy KG pipeline): dumps their formatted physical plans
+# in a base checkout and in a changed one, normalizes expression, plan and
+# RDD ids, and diffs. Exit status 0 and no diff output means the plans are
+# identical.
 #
 # usage: tools/plan_diff.sh <baseCheckout> <changedCheckout> <sfDir> <workDir>
 # e.g.   mkdir -p /tmp/base && git archive <parent> | tar -x -C /tmp/base
@@ -20,9 +21,12 @@ for side in base change; do
     "Test/runMain graft.PlanDump $sf $work/$side.raw" >"$work/$side.log" 2>&1) \
     || { echo "PlanDump failed in $dir; see $work/$side.log" >&2; exit 2; }
   # ids: expression #12, [plan_id=3], [id=#7], RDD ids like ExistingRDD[5],
-  # and the source line of an RDD's call site ("at map at Dedup.scala:266")
+  # the source line of an RDD's call site ("at map at Dedup.scala:266"),
+  # and the JVM identity of a typed operator's function object
+  # ("KgPipeline$$$Lambda$4589/0x00007f4e393207b0@664c6bbc")
   sed -E -e 's/#[0-9]+/#N/g' -e 's/plan_id=[0-9]+/plan_id=N/g' \
     -e 's/RDD\[[0-9]+\]/RDD[N]/g' -e 's/(\.scala):[0-9]+/\1:N/g' \
+    -e 's/Lambda(\$[0-9]+)?\/0x[0-9a-f]+@[0-9a-f]+/Lambda/g' \
     "$work/$side.raw" >"$work/$side.txt"
 done
 diff -u "$work/base.txt" "$work/change.txt"
