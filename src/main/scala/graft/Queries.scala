@@ -467,16 +467,10 @@ object Queries {
     * a curated seed list), 4 hops. The engine runs the frontier loop, the
     * oracle the unrolled whole-set recurrence — the hash match proves the
     * frontier optimization lossless ([[graft.graph.GraphOps.khopDistances]]). */
-  def kgKhop(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint: the seed agg and the BFS loop's persisted sym run as
-    // separate actions, each re-deriving the per-doc extraction (the
-    // userBetweenness/userPpr argument)
-    val e = kgTriples(s, dir)
-      .select(col("subj").as("src"), col("obj").as("dst"))
-      .localCheckpoint()
-    val seeds = graph.GraphOps.symmetrize(e).agg(min(col("src")).as("node"))
-    graph.GraphOps.khopDistances(e, seeds, maxHops = 4)
-  }
+  def kgKhop(s: SparkSession, dir: String): DataFrame =
+    seeded(kgTriples(s, dir).select(col("subj").as("src"), col("obj").as("dst")),
+      e => graph.GraphOps.symmetrize(e).agg(min(col("src")).as("node")))(
+      graph.GraphOps.khopDistances(_, _, maxHops = 4))
 
   /** Community labels over the co-occurrence KG: 3 rounds of synchronous
     * label propagation, most-frequent-neighbor label with min-label ties
@@ -612,12 +606,9 @@ object Queries {
     * behavioral graph ([[graft.graph.GraphOps.ssspBounded]]: the engine
     * relaxes only the changed frontier; the oracle unrolls the naive
     * whole-set recurrence — the khop theorem with weights). */
-  def userSssp(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint: seed agg + relaxation loop both read e
-    val e = userWeightedEdges(s, dir).localCheckpoint()
-    val seeds = e.agg(min(col("src")).as("node"))
-    graph.GraphOps.ssspBounded(e, seeds, rounds = 4)
-  }
+  def userSssp(s: SparkSession, dir: String): DataFrame =
+    seeded(userWeightedEdges(s, dir), smallestUser)(
+      graph.GraphOps.ssspBounded(_, _, rounds = 4))
 
   /** The user graph as TEMPORAL edges: one (src, dst, t) row per shared
     * minute, both directions — the time-respecting contact list
@@ -635,28 +626,18 @@ object Queries {
     * propagation primitive: a hop through a minute EARLIER than the
     * current arrival does not count; the oracle unrolls the naive
     * whole-set recurrence, proving the changed-frontier pruning exact). */
-  def userTemporalReach(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint: seed agg + arrival loop both read e
-    val e = userTemporalEdges(s, dir).localCheckpoint()
-    val seeds = e.agg(min(col("src")).as("node"))
-    graph.GraphOps.earliestArrival(e, seeds, rounds = 4)
-  }
+  def userTemporalReach(s: SparkSession, dir: String): DataFrame =
+    seeded(userTemporalEdges(s, dir), smallestUser)(
+      graph.GraphOps.earliestArrival(_, _, rounds = 4))
 
   /** Sampled-source harmonic centrality over the user graph: seeds =
     * users with id ≡ 0 (mod 7) (the deterministic sample an
     * Eppstein–Wang estimator BFSes from), 3 bounded hops, integer
     * permille harmonic sums
     * ([[graft.graph.GraphOps.harmonicCentrality]]). */
-  def userHarmonic(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint: the seed filter below and the operator's persisted sym
-    // would otherwise each evaluate the full bucket self-join
-    // (the userModularity precedent — e is ~|E| rows, the build is not)
-    val e = userGraphEdges(s, dir, spread = true).localCheckpoint()
-    val seeds = graph.GraphOps.symmetrize(e)
-      .select(col("src").as("node")).distinct()
-      .filter(col("node") % 7 === 0)
-    graph.GraphOps.harmonicCentrality(e, seeds, maxHops = 3)
-  }
+  def userHarmonic(s: SparkSession, dir: String): DataFrame =
+    seeded(userGraphEdges(s, dir, spread = true), everyMthUser(7))(
+      graph.GraphOps.harmonicCentrality(_, _, maxHops = 3))
 
   /** 3-hop neighborhood function over the user graph with k = 8 bottom-k
     * sketches ([[graft.graph.GraphOps.neighborhoodFunction]] — exact
@@ -673,15 +654,9 @@ object Queries {
     * bound of [[userHarmonic]],
     * exact integer path counts forward, fixed-point dependency
     * accumulation backward ([[graft.graph.GraphOps.betweenness]]). */
-  def userBetweenness(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint: seeds + the operator's sym persist both read e (the
-    // userHarmonic/userModularity argument)
-    val e = userGraphEdges(s, dir, spread = true).localCheckpoint()
-    val seeds = graph.GraphOps.symmetrize(e)
-      .select(col("src").as("node")).distinct()
-      .filter(col("node") % 13 === 0)
-    graph.GraphOps.betweenness(e, seeds, maxHops = 3)
-  }
+  def userBetweenness(s: SparkSession, dir: String): DataFrame =
+    seeded(userGraphEdges(s, dir, spread = true), everyMthUser(13))(
+      graph.GraphOps.betweenness(_, _, maxHops = 3))
 
   /** One-row structural summary of the user graph — counts, max degree,
     * wedges, distinct triangles, global clustering coefficient in exact
@@ -743,13 +718,31 @@ object Queries {
   /** Personalized PageRank seeded at the smallest user id, 5 rounds —
     * "users related to THIS one" by graph proximity
     * ([[graft.graph.GraphOps.personalizedPageRank]]). */
-  def userPpr(s: SparkSession, dir: String): DataFrame = {
-    // checkpoint: the seed agg and the operator's persisted edge table
-    // would otherwise each evaluate the bucket self-join
-    val e = userGraphEdges(s, dir).localCheckpoint()
-    val seeds = graph.GraphOps.symmetrize(e).agg(min(col("src")).as("node"))
-    graph.GraphOps.personalizedPageRank(e, seeds, iterations = 5)
+  def userPpr(s: SparkSession, dir: String): DataFrame =
+    seeded(userGraphEdges(s, dir), smallestUser)(
+      graph.GraphOps.personalizedPageRank(_, _, iterations = 5))
+
+  /** Runs a seeded graph operator over `edges` checkpointed once: the seed
+    * pick and the operator's persisted adjacency both read the edges, and
+    * would otherwise each evaluate the extraction or the bucket self-join
+    * (e is ~|E| rows, the build is not). */
+  private def seeded(edges: DataFrame, seeds: DataFrame => DataFrame)
+                    (op: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = edges.localCheckpoint()
+    op(e, seeds(e))
   }
+
+  /** The smallest user id as the one seed: every user edge table holds
+    * each edge with its smaller endpoint in `src` (src < dst, or both
+    * directions), so min(src) is the smallest user of the graph. */
+  private def smallestUser(e: DataFrame): DataFrame =
+    e.agg(min(col("src")).as("node"))
+
+  /** The deterministic seed sample of the sampled-source centralities:
+    * every user of the graph with id ≡ 0 (mod m). */
+  private def everyMthUser(m: Int)(e: DataFrame): DataFrame =
+    graph.GraphOps.symmetrize(e).select(col("src").as("node")).distinct()
+      .filter(col("node") % m === 0)
 
   /** Walk-corpus parameters shared by the engine and the generated
     * oracle: 2 walks of 4 steps per node, LCG salt 7, skip-gram window 2. */
@@ -1413,7 +1406,18 @@ object Queries {
     * trigger-between semantics, mirrored exactly by the oracle SQL in
     * SparkEntry (valid on this corpus: punctuation-free single-sentence
     * word soup, no vocab word contains a dict/trigger surface). */
-  def kgPipelineTriples(s: SparkSession, dir: String): DataFrame = {
+  def kgPipelineTriples(s: SparkSession, dir: String): DataFrame =
+    kgPipelineRun(s, dir).triples
+      // Doc ids ride through the typed pipeline as STRING; cast back to the
+      // source table's BIGINT so the driver's dtype-sensitive hash matches
+      // (same convention as multimodalFeatures below).
+      .select(col("doc_id").cast("long").as("doc_id"),
+        col("subj"), col("pred"), col("obj"))
+
+  /** [[KgPipeline.run]] over the documents table in the Doc shape, with
+    * the catalog dictionary, no equivalence edges and the lexicon scorer
+    * — the one pipeline run of [[kgPipelineTriples]] and [[kgNodes]]. */
+  private def kgPipelineRun(s: SparkSession, dir: String): KgPipeline.Output = {
     implicit val spark: SparkSession = s
     import s.implicits._
     val docs = operators.Dedup.spreadSmall(table(s, dir, "documents"))
@@ -1421,14 +1425,8 @@ object Queries {
       .as[(String, String)]
       .map { case (id, text) => Doc(id, Seq(Span("text", text, "", 0))) }
     val dict = kgDictWords.map(w => DictEntry(w, s"ent:$w", "Protein"))
-    val edges = s.emptyDataset[EquivEdge]
-    val scorer = new LexiconScorer(kgTriggerWords.toSet)
-    KgPipeline.run(docs, dict, edges, scorer).triples
-      // Doc ids ride through the typed pipeline as STRING; cast back to the
-      // source table's BIGINT so the driver's dtype-sensitive hash matches
-      // (same convention as multimodalFeatures below).
-      .select(col("doc_id").cast("long").as("doc_id"),
-        col("subj"), col("pred"), col("obj"))
+    KgPipeline.run(docs, dict, s.emptyDataset[EquivEdge],
+      new LexiconScorer(kgTriggerWords.toSet))
   }
 
   /** The pipeline's NODE table (S7 entity writeback) over the driver
@@ -1436,20 +1434,11 @@ object Queries {
     * Arrays don't compare portably across engines, so the query exposes
     * the set's size and minimum — with the single-surface dictionary both
     * are exact. */
-  def kgNodes(s: SparkSession, dir: String): DataFrame = {
-    implicit val spark: SparkSession = s
-    import s.implicits._
-    val docs = operators.Dedup.spreadSmall(table(s, dir, "documents"))
-      .select(col("doc_id").cast("string").as("doc_id"), col("text"))
-      .as[(String, String)]
-      .map { case (id, text) => Doc(id, Seq(Span("text", text, "", 0))) }
-    val dict = kgDictWords.map(w => DictEntry(w, s"ent:$w", "Protein"))
-    val scorer = new LexiconScorer(kgTriggerWords.toSet)
-    KgPipeline.run(docs, dict, s.emptyDataset[EquivEdge], scorer).nodes
+  def kgNodes(s: SparkSession, dir: String): DataFrame =
+    kgPipelineRun(s, dir).nodes
       .select(col("node_id"), col("tag"), col("n_mentions"),
         size(col("surfaces")).cast("long").as("n_surfaces"),
         element_at(col("surfaces"), 1).as("first_surface"))
-  }
 
   // ------------------------------------------------------------ multimodal
 

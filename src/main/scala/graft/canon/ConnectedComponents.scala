@@ -2,8 +2,8 @@ package graft.canon
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.EquivEdge
+import graft.graph.GraphOps
 
 /** Global entity canonicalization via iterative-self-join connected
   * components (SURVEY.md J6/X4, §7.1 module 7).
@@ -81,12 +81,9 @@ object ConnectedComponents {
   def canonicalize(edges: Dataset[EquivEdge], maxIter: Int = 20)
                   (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // undirected: materialize both directions once
-    val sym = edges.select($"src", $"dst")
-      .union(edges.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    // undirected: both directions once, hash-partitioned on src and
+    // persisted for the loop's joins (the graph operators' adjacency)
+    GraphOps.withAdjacency(GraphOps.symmetrize(edges.toDF())) { sym =>
       var labels = sym.select($"src".as("node_id"))
         .distinct()
         .withColumn("canonical_id", $"node_id")
@@ -100,8 +97,8 @@ object ConnectedComponents {
         // convergence into O(log diameter), so long alias chains don't
         // exhaust the iteration budget
         val viaNeighbors = sym
-          .join(labels, sym("dst") === labels("node_id"))
-          .select(sym("src").as("node_id"), $"canonical_id")
+          .join(labels, sym("src") === labels("node_id"))
+          .select(sym("dst").as("node_id"), $"canonical_id")
         val l2 = labels.select($"node_id".as("ptr_node"), $"canonical_id".as("ptr_label"))
         val viaPointer = labels
           .join(l2, labels("canonical_id") === l2("ptr_node"))
@@ -117,7 +114,7 @@ object ConnectedComponents {
       }
       require(changed == 0, s"connected components did not converge in $maxIter iterations")
       labels
-    } finally sym.unpersist()
+    }
   }
 
   /** Rewrite a column of node ids to canonical ids: identity for nodes with

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -42,10 +42,162 @@ object GraphOps {
     * weighted, temporal or directed) hash-partitioned on src ONCE and
     * persisted, so every round's join shuffles only the small side; the
     * table is released when `body` returns or throws. */
-  private def withAdjacency[T](edges: DataFrame)(body: DataFrame => T): T = {
+  private[graft] def withAdjacency[T](edges: DataFrame)(body: DataFrame => T): T = {
     val adj = edges.repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try body(adj) finally adj.unpersist()
+  }
+
+  /** Per-node degree (n, d) of a symmetric edge list (src, dst). */
+  private def degrees(sym: DataFrame): DataFrame =
+    sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
+
+  /** `df` checkpointed, with the number of its rows that satisfy `rows`
+    * observed in the same job: the iterative kernels' emptiness test,
+    * without a probe job of its own. */
+  private def checkpointCounting(df: DataFrame,
+                                 rows: Column = lit(true)): (DataFrame, Long) = {
+    val n = Observation()
+    val cp = df.observe(n, count(when(rows, 1)).as("n")).localCheckpoint(true)
+    (cp, n.get("n").asInstanceOf[Long])
+  }
+
+  /** The one frontier BFS of the hop-distance operators ([[khopDistances]],
+    * [[perSeedDistances]], [[transitiveClosure]] and the forward phase of
+    * [[betweenness]]). `start` holds the rows settled before the first of
+    * `hops`: (keys…, node, dist), plus any payload columns. Each round
+    * expands only the LAST round's new rows by one edge (src → dst) of
+    * `adj`, keeps one row per (keys…, node) — summing every payload column
+    * over the row's predecessors (betweenness' σ) — and anti-joins away
+    * the pairs already settled, so each pair settles once, at its minimum
+    * hop. Round r touches O(|frontier_r|·d̄) rows, not O(|settled|·d̄).
+    *
+    * One policy for every caller, measured per catalog entry (CHANGES.md):
+    *  - each round's frontier is pinned to `defaultParallelism`
+    *    partitions on (keys…, node) before its checkpoint: the next
+    *    round's expansion fans every frontier row out by its degree, a
+    *    rows×degree cost AQE's byte-based coalescing cannot see (a
+    *    small-byte frontier collapses to 1-2 partitions and the fan-out
+    *    runs single-task); the explicit count is exempt from re-coalescing;
+    *  - every frontier is checkpointed, so k rounds stay k·O(1) plans and
+    *    the settled table is a flat union of materialized leaves;
+    *  - each frontier's row count is observed in its checkpoint job, and
+    *    an empty frontier ends the loop without a probe job — equal to
+    *    running every round, as an empty frontier expands to nothing.
+    *
+    * @return the settled rows of every round (`start` included) and the
+    *         row count of each level, `start` first. */
+  private def frontierBfs(adj: DataFrame, start: DataFrame, keys: Seq[String],
+                          hops: Range): (DataFrame, Vector[Long]) = {
+    val key = keys :+ "node"
+    val sums = start.columns.toSeq.filterNot((key :+ "dist").contains)
+      .map(p => sum(col(p)).as(p))
+    val par = adj.sparkSession.sparkContext.defaultParallelism
+    var (frontier, n) = checkpointCounting(start)
+    var settled = frontier
+    var sizes = Vector(n)
+    val rounds = hops.iterator
+    while (n > 0 && rounds.hasNext) {
+      val hop = rounds.next()
+      val expanded = frontier.join(adj.withColumnRenamed("src", "node"), "node")
+      val reached = keys.map(col) :+ col("dst").as("node")
+      val next = (if (sums.isEmpty) expanded.select(reached: _*).distinct()
+                  else expanded.groupBy(reached: _*).agg(sums.head, sums.tail: _*))
+        .join(settled, key, "left_anti")
+        .withColumn("dist", lit(hop))
+        .repartition(par, key.map(col): _*)
+      val (f, m) = checkpointCounting(next)
+      frontier = f; n = m; sizes :+= m
+      settled = settled.unionByName(frontier)
+    }
+    (settled, sizes)
+  }
+
+  /** The one min-relaxation loop of [[ssspBounded]] and
+    * [[earliestArrival]]. `start` holds (node, <value>). Each round `cand`
+    * turns an edge of `adj` (src, dst, …) out of the frontier — the nodes
+    * whose value improved last round; it reads their value column — into
+    * a candidate value for dst, or null where the edge cannot be taken.
+    * The minimum candidate per node is merged full-outer into the settled
+    * values (least skips nulls), and the nodes it improved are the next
+    * frontier: an unchanged node already offered its candidates and
+    * values never grow, so relaxing it again is a no-op. Each round's
+    * merge is checkpointed with its improved rows counted in the same job;
+    * a round that improves nothing ends the loop, as every later round
+    * would be the identity.
+    *
+    * @return (node, <value>) over `start` and every node reached within
+    *         `rounds` relaxations. */
+  private def relaxMin(adj: DataFrame, start: DataFrame, rounds: Int)
+                      (cand: Column): DataFrame = {
+    val v = start.columns(1)
+    var (settled, n) = checkpointCounting(start)
+    var frontier = settled
+    var r = 0
+    while (r < rounds && n > 0) {
+      r += 1
+      val best = frontier.join(adj.withColumnRenamed("src", "node"), "node")
+        .select(col("dst").as("node"), cand.as("c"))
+        .filter(col("c").isNotNull)
+        .groupBy(col("node")).agg(min(col("c")).as("c"))
+      val (merged, m) = checkpointCounting(
+        settled.join(best, Seq("node"), "full_outer")
+          .select(col("node"), least(col(v), col("c")).as(v),
+            (col("c").isNotNull && (col(v).isNull || col("c") < col(v)))
+              .as("improved")),
+        col("improved"))
+      frontier = merged.filter(col("improved")).select(col("node"), col(v))
+      settled = merged.select(col("node"), col(v))
+      n = m
+    }
+    settled
+  }
+
+  /** Every triangle of a simple undirected graph `sym` (src, dst, both
+    * directions) exactly once, as (u, v, w) — the one enumeration of
+    * [[triangleCounts]] (and through it [[graphStats]]) and of
+    * [[kTrussPeel]]'s supports.
+    *
+    * DEGREE-ORDERED compact-forward (Latapy 2008, the standard
+    * distributed variant): nodes are ranked by (degree, id) and every
+    * edge is oriented from the lower- to the higher-ranked endpoint, so
+    * each triangle is generated exactly once — at its lowest-ranked
+    * corner u, with v ranked before w — and, crucially, wedge fan-out at a
+    * hub is bounded by the number of HIGHER-ranked neighbors, O(√E) per
+    * node, instead of the raw degree. On a p53-class hub (degree 10⁵ in a
+    * billion-edge KG) the naive id-ordered join builds 10¹⁰ wedges; the
+    * degree-ordered one caps at ~|E|^{3/2} total work, the proven bound.
+    * Shape: two self-equi-joins on the oriented edge table, no collect,
+    * no window.
+    *
+    * One policy for every caller, measured per catalog entry (CHANGES.md):
+    * the oriented table is checkpointed — its three consumers (both wedge
+    * sides and the closing probe) read it instead of re-deriving the two
+    * degree joins each, and the closing side, small with known stats,
+    * broadcasts under the wedge join — and the wedge sides are not
+    * pinned. */
+  private def triangles(sym: DataFrame): DataFrame = {
+    val deg = degrees(sym)
+    // orient low→high by (degree, id); ties break on the id so the order
+    // is total and the oriented edge set is exactly half the symmetric one
+    val or1 = sym
+      .join(deg.select(col("n").as("src"), col("d").as("ds")), "src")
+      .join(deg.select(col("n").as("dst"), col("d").as("dd")), "dst")
+      .filter(col("ds") < col("dd") ||
+        (col("ds") === col("dd") && col("src") < col("dst")))
+      .select(col("src"), col("dst"), col("dd"))
+      .localCheckpoint(true)
+    // wedges at the lowest-ranked corner u: (u→v, u→w) with v before w in
+    // the SAME (degree, id) order; triangle iff the oriented edge v→w
+    // exists. The closing join probes the oriented table, not the full
+    // symmetric one — half the build side.
+    val x = or1.select(col("src").as("u"), col("dst").as("v"), col("dd").as("dv"))
+    val y = or1.select(col("src").as("u"), col("dst").as("w"), col("dd").as("dw"))
+    val wedges = x.join(y, Seq("u"))
+      .filter(col("dv") < col("dw") ||
+        (col("dv") === col("dw") && col("v") < col("w")))
+    val closing = or1.select(col("src").as("v"), col("dst").as("w"))
+    wedges.join(closing, Seq("v", "w")).select("u", "v", "w")
   }
 
   /** Per-node structural rollup of an edge-rollup table
@@ -68,49 +220,20 @@ object GraphOps {
     * clustering signal a KG consumer reads to separate tight complexes
     * from hub-and-spoke co-occurrence artifacts.
     *
-    * Enumeration is DEGREE-ORDERED compact-forward (Latapy 2008, the
-    * standard distributed variant): nodes are ranked by (degree, id) and
-    * every undirected edge is oriented from the lower- to the
-    * higher-ranked endpoint, so each triangle is generated exactly once —
-    * at its lowest-ranked corner — and, crucially, wedge fan-out at a hub
-    * is bounded by the number of HIGHER-ranked neighbors, O(√E) per node,
-    * instead of the raw degree. On a p53-class hub (degree 10⁵ in a
-    * billion-edge KG) the naive id-ordered join builds 10¹⁰ wedges; the
-    * degree-ordered one caps at ~|E|^{3/2} total work, the proven bound.
-    * The triangle SET is orientation-invariant, so the DuckDB oracle
-    * enumerates with the naive a<b<c form and a hash match proves the
-    * optimized plan exact. Shape: two self-equi-joins on the oriented
-    * edge table + one map-side-combinable count — no collect, no window.
+    * Enumeration is the degree-ordered compact-forward [[triangles]]:
+    * each triangle once, at its lowest-ranked corner, credited to its
+    * three corners by one map-side-combinable count. The triangle SET is
+    * orientation-invariant, so the DuckDB oracle enumerates with the
+    * naive a<b<c form and a hash match proves the optimized plan exact.
     *
     * @return DataFrame(node, n_tri) covering every node of the
     *         symmetrized edge list (0 for triangle-free nodes). */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val sym = undirected(edges)
-    val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-    // orient low→high by (degree, id); ties break on the id so the order
-    // is total and the oriented edge set is exactly half the symmetric one
-    val or1 = sym
-      .join(deg.select(col("n").as("src"), col("d").as("ds")), "src")
-      .join(deg.select(col("n").as("dst"), col("d").as("dd")), "dst")
-      .filter(col("ds") < col("dd") ||
-        (col("ds") === col("dd") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("dd"))
-    // wedges at the lowest-ranked corner u: (u→v, u→w) with v before w in
-    // the SAME (degree, id) order; triangle iff the oriented edge v→w
-    // exists. The closing join probes the oriented table, not the full
-    // symmetric one — half the build side.
-    val x = or1.select(col("src").as("u"), col("dst").as("v"), col("dd").as("dv"))
-    val y = or1.select(col("src").as("u"), col("dst").as("w"), col("dd").as("dw"))
-    val wedges = x.join(y, Seq("u"))
-      .filter(col("dv") < col("dw") ||
-        (col("dv") === col("dw") && col("v") < col("w")))
-    val closing = or1.select(col("src").as("v"), col("dst").as("w"))
-    val tris = wedges.join(closing, Seq("v", "w")).select("u", "v", "w")
-    val corners = tris.select(col("u").as("node"))
-      .unionByName(tris.select(col("v").as("node")))
-      .unionByName(tris.select(col("w").as("node")))
+    val tris = triangles(sym)
+    val corners = tris.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-    deg.select(col("n").as("node"))
+    degrees(sym).select(col("n").as("node"))
       .join(corners, Seq("node"), "left")
       .select(col("node"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
@@ -140,7 +263,7 @@ object GraphOps {
     require(minPermille >= 0 && minPermille <= 1000,
       s"minPermille must be in [0, 1000], got $minPermille")
     val sym = undirected(edges)
-    val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
+    val deg = degrees(sym)
     val wedges = sym.select(col("src").as("node_a"), col("dst").as("nb"))
       .join(sym.select(col("src").as("node_b"), col("dst").as("nb")), Seq("nb"))
       .filter(col("node_a") < col("node_b"))
@@ -167,12 +290,12 @@ object GraphOps {
     * on a billion-edge graph: round r touches O(|frontier_r|·d̄) rows, not
     * O(|settled|·d̄)) lossless.
     *
-    * Scale shape: the symmetrized edge table is hash-partitioned on src
-    * once and persisted (the pageRank pattern); each round shuffles only
-    * the frontier (and broadcasts it when small). `localCheckpoint` per
-    * round keeps k rounds at k·O(1) plans. An emptied frontier short-
-    * circuits the remaining rounds — equal to the unrolled oracle, whose
-    * extra rounds are no-ops once nothing new is reachable.
+    * Scale shape: [[frontierBfs]] with no key over the symmetrized edge
+    * table, hash-partitioned on src once and persisted; each round
+    * shuffles only the frontier (and broadcasts it when small). An
+    * emptied frontier short-circuits the remaining rounds — equal to the
+    * unrolled oracle, whose extra rounds are no-ops once nothing new is
+    * reachable.
     *
     * @param seeds single-column DataFrame `node`; rows absent from the
     *              edge list are still emitted at dist 0 (a seed is at
@@ -181,31 +304,19 @@ object GraphOps {
   def khopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     withAdjacency(symmetrize(edges)) { sym =>
-      var settled = seeds.select(col("node")).distinct()
-        .withColumn("dist", lit(0)).localCheckpoint(true)
-      var frontier = settled
-      var hop = 0
-      while (hop < maxHops && !frontier.isEmpty) {
-        hop += 1
-        frontier = sym.join(frontier, sym("src") === frontier("node"))
-          .select(sym("dst").as("node")).distinct()
-          .join(settled, Seq("node"), "left_anti")
-          .withColumn("dist", lit(hop))
-          .localCheckpoint(true)
-        settled = settled.unionByName(frontier)
-      }
-      settled
+      frontierBfs(sym, seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0)), Nil, 1 to maxHops)._1
     }
   }
 
   /** PER-SEED bounded BFS distances — [[khopDistances]] keyed by seed:
     * where the multi-source form settles the MIN distance over the whole
     * seed set, this keeps one distance row PER (seed, reached node), the
-    * table sampled-source centrality estimators aggregate. Same
-    * changed-frontier pruning, anti-joined on the (seed, node) pair key;
-    * the frontier join stays ONE equi-join per hop regardless of seed
-    * count (seeds ride along as a payload column), so s seeds cost the
-    * same shuffle count as one.
+    * table sampled-source centrality estimators aggregate: [[frontierBfs]]
+    * keyed on seed, anti-joined on the (seed, node) pair; the frontier
+    * join stays ONE equi-join per hop regardless of seed count (seeds ride
+    * along as a key column), so s seeds cost the same shuffle count as
+    * one.
     *
     * @param seeds one `node` column; duplicates collapse.
     * @return DataFrame(seed, node, dist) for every node within `maxHops`
@@ -213,34 +324,15 @@ object GraphOps {
   def perSeedDistances(edges: DataFrame, seeds: DataFrame,
                        maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val par = edges.sparkSession.sparkContext.defaultParallelism
     withAdjacency(symmetrize(edges)) { sym =>
-      var settled = seeds.select(col("node").as("seed")).distinct()
-        .select(col("seed"), col("seed").as("node"))
-        .withColumn("dist", lit(0)).localCheckpoint(true)
-      var frontier = settled
-      var hop = 0
-      while (hop < maxHops && !frontier.isEmpty) {
-        hop += 1
-        // the frontier checkpoint is pinned to an explicit fixed-count
-        // partitioning: the NEXT round's expansion join fans each frontier
-        // row out by its degree, so its cost follows rows×degree, not bytes
-        // — left to AQE's byte-based coalescing a small-byte frontier
-        // collapses to 1-2 partitions and the fan-out runs single-task
-        // (measured as the wall-clock of this loop). defaultParallelism
-        // scales with the cluster; the explicit count is exempt from AQE
-        // re-coalescing.
-        frontier = sym.join(frontier, sym("src") === frontier("node"))
-          .select(col("seed"), sym("dst").as("node")).distinct()
-          .join(settled, Seq("seed", "node"), "left_anti")
-          .withColumn("dist", lit(hop))
-          .repartition(par, col("seed"), col("node"))
-          .localCheckpoint(true)
-        settled = settled.unionByName(frontier)
-      }
-      settled
+      frontierBfs(sym, seedRows(seeds), Seq("seed"), 1 to maxHops)._1
     }
   }
+
+  /** One hop-0 row (seed, node = seed, dist = 0) per distinct seed. */
+  private def seedRows(seeds: DataFrame): DataFrame =
+    seeds.select(col("node").as("seed")).distinct()
+      .select(col("seed"), col("seed").as("node"), lit(0).as("dist"))
 
   /** SAMPLED-SOURCE HARMONIC CENTRALITY (Eppstein–Wang estimation,
     * Δ-bounded): for every node v, Σ over sampled seeds s ≠ v within
@@ -372,9 +464,9 @@ object GraphOps {
     * truncation is floor on both engines). Betweenness(v) = Σ over
     * seeds of δ(s,v), v ≠ s.
     *
-    * Scale shape: the forward loop is [[perSeedDistances]] with one
-    * extra combinable sum (σ rides the frontier exactly like the seed
-    * key); the backward loop is `maxHops` co-partitioned
+    * Scale shape: the forward loop is [[frontierBfs]] keyed on seed, as
+    * in [[perSeedDistances]], with σ as its summed payload; the backward
+    * loop is `maxHops` co-partitioned
     * level-(l)×level-(l+1) joins — every join keyed on (seed, node), no
     * window, no collect; s seeds share each round's shuffles.
     *
@@ -386,34 +478,10 @@ object GraphOps {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val par = edges.sparkSession.sparkContext.defaultParallelism
     withAdjacency(undirected(edges)) { sym =>
-      var settled = seeds.select(col("node").as("seed")).distinct()
-        .select(col("seed"), col("seed").as("node"))
-        .withColumn("dist", lit(0)).withColumn("sigma", lit(1L))
-        .localCheckpoint(true)
-      var frontier = settled
-      var hop = 0
-      // fixed-hop loop, no per-round emptiness probe: an exhausted frontier
-      // makes the remaining rounds no-ops over an empty materialized side,
-      // and settled stays a flat union of CHECKPOINTED frontiers (no
-      // re-checkpoint of the union — each leaf is already materialized).
-      // Frontier checkpoints are pinned to an explicit fixed-count
-      // partitioning (the perSeedDistances argument: the next expansion
-      // join's cost is rows×degree, which AQE's byte-based coalescing
-      // cannot see — unpinned, a few-MB frontier collapses to 1-2
-      // partitions and the fan-out runs single-task).
-      while (hop < maxHops) {
-        hop += 1
-        frontier = sym.join(frontier, sym("src") === frontier("node"))
-          .groupBy(col("seed"), sym("dst").as("node"))
-          .agg(sum(col("sigma")).as("sigma"))
-          .join(settled, Seq("seed", "node"), "left_anti")
-          .withColumn("dist", lit(hop))
-          .select(col("seed"), col("node"), col("dist"), col("sigma"))
-          .repartition(par, col("seed"), col("node"))
-          .localCheckpoint(true)
-        settled = settled.unionByName(frontier)
-      }
-      val deepest = hop
+      val (settled, levelSize) = frontierBfs(sym,
+        seedRows(seeds).withColumn("sigma", lit(1L)), Seq("seed"), 1 to maxHops)
+      // the deepest non-empty level (the BFS stops at the first empty one)
+      val deepest = levelSize.lastIndexWhere(_ > 0)
       // backward accumulation: δ at the deepest level is 0; each level
       // pulls from its successors through the (seed-shared) edge table.
       // Deliberately NOT a materialized successor-DAG: the DAG is
@@ -429,13 +497,10 @@ object GraphOps {
       // the (small) successor side — sym ⋈ succ fans out ONLY the edges
       // that point INTO a successor, instead of materializing the full
       // level×degree expansion and filtering it afterwards.
-      // per-level row counts in ONE aggregation job: the backward loop picks
-      // its expansion side by |level| vs |succ|, and δ-rows per level are
-      // exactly the level's rows (the left_outer below preserves them), so
-      // the sizes are known up front — no per-level count() actions.
-      val levelSize: Map[Int, Long] = settled.groupBy(col("dist")).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          .withDefaultValue(0L)
+      // the backward loop picks its expansion side by |level| vs |succ|
+      // from the forward levels' row counts, which the BFS observed for
+      // free; δ-rows per level are exactly the level's rows (the
+      // left_outer below preserves them) — no per-level count() actions.
       var delta = settled.filter(col("dist") === deepest)
         .select(col("seed"), col("node"), lit(0L).as("delta"), col("sigma"))
         .localCheckpoint(true)
@@ -646,10 +711,7 @@ object GraphOps {
       val base = r0 * (1000000L - dampingPpm) / 1000000L
       var ranks = deg.select(col("src").as("node"), lit(r0).as("r"))
       for (_ <- 1 to iterations) {
-        ranks = e.join(ranks, e("src") === ranks("node"))
-          .select(e("dst").as("node"), expr("r div od").as("c"))
-          .groupBy(col("node"))
-          .agg(sum(col("c")).as("s"))
+        ranks = rankFlow(e, ranks)
           .select(col("node"),
             (lit(base) + expr(s"($dampingPpm * s) div 1000000")).as("r"))
           .localCheckpoint(true)
@@ -657,6 +719,14 @@ object GraphOps {
       ranks.select(col("node"), col("r").as("rank_ppt"))
     }
   }
+
+  /** One PageRank push over the degree-joined edges (src, dst, od): every
+    * node's rank r splits into `r div od` per out-edge, summed per
+    * receiving node as (node, s). */
+  private def rankFlow(e: DataFrame, ranks: DataFrame): DataFrame =
+    e.join(ranks, e("src") === ranks("node"))
+      .select(e("dst").as("node"), expr("r div od").as("c"))
+      .groupBy(col("node")).agg(sum(col("c")).as("s"))
 
   /** Bounded-round weighted shortest paths (synchronous Bellman-Ford,
     * the distributed relaxation): after `rounds` rounds every node holds
@@ -666,8 +736,8 @@ object GraphOps {
     * undirected reading.
     *
     * The engine relaxes only the CHANGED frontier each round (nodes whose
-    * distance improved last round) — the khopDistances argument with
-    * weights: a node unchanged since round j already contributed
+    * distance improved last round, [[relaxMin]]) — the khopDistances
+    * argument with weights: a node unchanged since round j already contributed
     * dist(u)+w(u,v) to every neighbor in round j+1, distances never
     * increase, so re-relaxing it is a no-op. The DuckDB oracle unrolls
     * the NAIVE whole-set recurrence
@@ -682,26 +752,8 @@ object GraphOps {
   def ssspBounded(wEdges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     withAdjacency(wEdges.select(col("src"), col("dst"), col("w"))) { e =>
-      var dist = sources.select(col("node")).distinct()
-        .withColumn("dist", lit(0L)).localCheckpoint(true)
-      var frontier = dist
-      var r = 0
-      while (r < rounds && !frontier.isEmpty) {
-        r += 1
-        val cand = e.join(frontier, e("src") === frontier("node"))
-          .select(e("dst").as("node"), (col("dist") + col("w")).as("c"))
-          .groupBy(col("node")).agg(min(col("c")).as("c"))
-        val merged = dist.join(cand, Seq("node"), "full_outer")
-          .select(col("node"),
-            least(col("dist"), col("c")).as("dist"), // least skips nulls
-            (col("dist").isNull || (col("c").isNotNull &&
-              col("c") < col("dist"))).as("improved"))
-          .localCheckpoint(true)
-        frontier = merged.filter(col("improved"))
-          .select(col("node"), col("dist"))
-        dist = merged.select(col("node"), col("dist"))
-      }
-      dist
+      relaxMin(e, sources.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)), rounds)(col("dist") + col("w"))
     }
   }
 
@@ -716,8 +768,7 @@ object GraphOps {
     * aggregations; the result is one row regardless of |E|. */
   def graphStats(edges: DataFrame): DataFrame = {
     val sym = undirected(edges)
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val degStats = deg.agg(count(lit(1)).as("n_nodes"), max(col("d")).as("max_degree"),
+    val degStats = degrees(sym).agg(count(lit(1)).as("n_nodes"), max(col("d")).as("max_degree"),
       sum(expr("d * (d - 1) div 2")).as("n_wedges"))
     val edgeCount = sym.filter(col("src") < col("dst"))
       .agg(count(lit(1)).as("n_edges"))
@@ -747,24 +798,22 @@ object GraphOps {
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var cur = undirected(edges)
-      .localCheckpoint(true)
+    var (cur, n) = checkpointCounting(undirected(edges))
     var stable = false
     var r = 0
     while (r < rounds && !stable) {
       r += 1
-      val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("src").as("node"))
-      val next = cur
+      val keep = degrees(cur).filter(col("d") >= k).select(col("n").as("node"))
+      // the survivors are counted in their checkpoint job: a round that
+      // drops no edge is stable, with no count action of its own
+      val (next, m) = checkpointCounting(cur
         .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      // one bounded action per round, like the CC loop's convergence check
-      stable = next.count() == cur.count()
-      cur = next
+        .select(col("src"), col("dst")))
+      stable = m == n
+      cur = next; n = m
     }
-    cur.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    degrees(cur).select(col("n").as("node"), col("d").as("deg"))
   }
 
   /** LUBY'S MAXIMAL INDEPENDENT SET — the foundational symmetry-breaking
@@ -788,9 +837,9 @@ object GraphOps {
     * asserted against the engine's own graphs in GraphOpsSpec rather
     * than with a per-call max(node) action, which would add a full-table
     * aggregation job to every invocation. Per round: one neighbor-min
-    * aggregation, two
-    * anti-joins, two semi-joins — all co-partitioned on the node key; one
-    * bounded count action checks termination. Expected O(log n) rounds
+    * aggregation, two anti-joins, two semi-joins — all co-partitioned on
+    * the node key; the undecided nodes are counted in their checkpoint
+    * job, which ends the loop once none is left. Expected O(log n) rounds
     * for hash priorities; if `rounds` is exhausted with undecided nodes
     * left, the returned set is independent but possibly not yet maximal
     * (the caller sizes `rounds`, exactly like the k-core contract).
@@ -834,13 +883,14 @@ object GraphOps {
       mis = mis.unionByName(joined.withColumn("round", lit(r)))
       val losers = cur.join(winners.withColumnRenamed("node", "src"),
         Seq("src"), "left_semi").select(col("dst").as("node")).distinct()
-      und = und.join(joined.unionByName(losers), Seq("node"), "left_anti")
-        .localCheckpoint(true)
+      val (left, n) = checkpointCounting(
+        und.join(joined.unionByName(losers), Seq("node"), "left_anti"))
+      und = left
       cur = cur
         .join(und.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(und.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
         .select(col("src"), col("dst")).localCheckpoint(true)
-      done = und.isEmpty
+      done = n == 0
     }
     mis
   }
@@ -853,12 +903,12 @@ object GraphOps {
     * co-occurrence graphs. Each round recomputes per-edge support inside
     * the CURRENT edge set and drops the under-supported edges; dropping
     * an edge can starve its neighbors' triangles, so peeling cascades
-    * (bounded by `rounds`, with the same one-action-per-round stability
+    * (bounded by `rounds`, with the same observed-count stability
     * short-circuit as the k-core loop — provably equal to the full
     * unroll, because peeling a stable set recomputes the same supports).
     *
-    * Support enumeration reuses the degree-ordered compact-forward
-    * triangle walk of [[triangleCounts]] — each triangle found once at
+    * Support enumeration is the degree-ordered compact-forward
+    * [[triangles]] of [[triangleCounts]] — each triangle found once at
     * its lowest-ranked corner, then credited to its THREE edges (an
     * explode of exactly 3 rows per triangle), so hub wedge fan-out stays
     * O(√E) per node instead of the naive per-edge common-neighbor join's
@@ -871,67 +921,38 @@ object GraphOps {
     require(k >= 3, s"k must be >= 3, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     def supports(cur: DataFrame): DataFrame = {
-      val par = cur.sparkSession.sparkContext.defaultParallelism
-      val sym = cur.unionByName(
-        cur.select(col("b").as("a"), col("a").as("b")))
-      val deg = sym.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
-      // or1 is consumed THREE times below (both wedge sides + the closing
-      // probe); checkpoint it once instead of re-deriving the two degree
-      // joins per consumer. The wedge self-join sides are pinned to an
-      // explicit u-keyed partitioning (the linkPredict argument: the join
-      // fans out quadratically in the higher-ranked degree, which
-      // byte-based coalescing cannot see), and the checkpointed closing
-      // side is small with known stats, so it broadcasts under the
-      // oriented-edge join instead of shuffling the wedge stream.
-      val or1 = sym
-        .join(deg.select(col("n").as("a"), col("d").as("ds")), "a")
-        .join(deg.select(col("n").as("b"), col("d").as("dd")), "b")
-        .filter(col("ds") < col("dd") ||
-          (col("ds") === col("dd") && col("a") < col("b")))
-        .select(col("a"), col("b"), col("dd"))
-        .localCheckpoint(true)
-      val x = or1.select(col("a").as("u"), col("b").as("v"),
-        col("dd").as("dv")).repartition(par, col("u"))
-      val y = or1.select(col("a").as("u"), col("b").as("w"),
-        col("dd").as("dw")).repartition(par, col("u"))
-      val wedges = x.join(y, Seq("u"))
-        .filter(col("dv") < col("dw") ||
-          (col("dv") === col("dw") && col("v") < col("w")))
-      val closing = or1.select(col("a").as("v"), col("b").as("w"))
-      val tris = wedges.join(closing, Seq("v", "w")).select("u", "v", "w")
-      val credits = tris.select(col("u").as("p"), col("v").as("q"))
-        .unionByName(tris.select(col("u").as("p"), col("w").as("q")))
-        .unionByName(tris.select(col("v").as("p"), col("w").as("q")))
-        .select(least(col("p"), col("q")).as("a"),
-          greatest(col("p"), col("q")).as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+      val tris = triangles(cur.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(cur.select(col("b").as("src"), col("a").as("dst"))))
+      val credits = tris.select(explode(array(array(col("u"), col("v")),
+          array(col("u"), col("w")), array(col("v"), col("w")))).as("e"))
+        .groupBy(array_min(col("e")).as("a"), array_max(col("e")).as("b"))
+        .agg(count(lit(1)).as("support"))
       cur.join(credits, Seq("a", "b"), "left_outer")
         .select(col("a"), col("b"),
           coalesce(col("support"), lit(0L)).as("support"))
     }
-    var cur = edges
+    var (cur, n) = checkpointCounting(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    // checkpoint the SUPPORT table, not the filtered edge set: `next` (and
-    // the returned survivors) are cheap filters over the materialized
-    // supports, so each round evaluates the triangle recount exactly once
-    // — checkpointing `next` instead made the final return re-derive the
-    // whole last supports() pass from lineage (one extra full recount per
-    // call, measured ~20% of the operator)
-    var sup = supports(cur).localCheckpoint(true)
-    var stable = false
-    var r = 0
-    while (r < rounds && !stable) {
+      .filter(col("a") =!= col("b")).distinct())
+    // checkpoint the SUPPORT table, not the filtered edge set: the next
+    // round's edges (and the returned survivors) are cheap filters over
+    // the materialized supports, so each round evaluates the triangle
+    // recount exactly once — checkpointing the filtered set instead made
+    // the final return re-derive the whole last supports() pass from
+    // lineage (one extra full recount per call, measured ~20% of the
+    // operator). The survivors are counted in that checkpoint job: a
+    // round that drops no edge is stable, with no count action of its own.
+    val survives = col("support") >= k - 2
+    var (sup, m) = checkpointCounting(supports(cur), survives)
+    var r = 1
+    while (r < rounds && m < n) {
       r += 1
-      if (r > 1) sup = supports(cur).localCheckpoint(true)
-      val next = sup.filter(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-      stable = next.count() == cur.count()
-      cur = next
+      cur = sup.filter(survives).select(col("a"), col("b")); n = m
+      val next = checkpointCounting(supports(cur), survives)
+      sup = next._1; m = next._2
     }
-    sup.filter(col("support") >= k - 2)
+    sup.filter(survives)
       .select(col("a").as("src"), col("b").as("dst"), col("support"))
   }
 
@@ -964,7 +985,7 @@ object GraphOps {
     val sym = undirected(edges)
       .repartition(edges.sparkSession.sparkContext.defaultParallelism,
         col("dst"))
-    val deg = sym.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
+    val deg = degrees(sym)
     val wedges = sym.select(col("src").as("node_a"), col("dst").as("z"))
       .join(sym.select(col("src").as("node_b"), col("dst").as("z")), Seq("z"))
       .filter(col("node_a") < col("node_b"))
@@ -1005,18 +1026,14 @@ object GraphOps {
     val sym = symmetrize(edges)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("od"))
     withAdjacency(sym.join(deg, "src")) { e =>
-      val s = seeds.select(col("node")).distinct().localCheckpoint(true)
-      val nS = s.count()
+      val (s, nS) = checkpointCounting(seeds.select(col("node")).distinct())
       require(nS > 0, "personalizedPageRank needs a non-empty seed set")
       val r0 = scale / nS
       val base = r0 * (1000000L - dampingPpm) / 1000000L
       val seedBase = s.withColumn("b", lit(base))
       var ranks = s.withColumn("r", lit(r0))
       for (_ <- 1 to iterations) {
-        val contrib = e.join(ranks, e("src") === ranks("node"))
-          .select(e("dst").as("node"), expr("r div od").as("c"))
-          .groupBy(col("node"))
-          .agg(sum(col("c")).as("s"))
+        val contrib = rankFlow(e, ranks)
           .select(col("node"), expr(s"($dampingPpm * s) div 1000000").as("c"))
         ranks = contrib.join(seedBase, Seq("node"), "full_outer")
           .select(col("node"),
@@ -1058,36 +1075,48 @@ object GraphOps {
     require(length >= 0, s"length must be >= 0, got $length")
     require(walksPerNode >= 1, s"walksPerNode must be >= 1, got $walksPerNode")
     withAdjacency(symmetrize(edges)) { sym =>
-      var cur = sym.select(col("src").as("start")).distinct()
-        .withColumn("walk", explode(array((0 until walksPerNode).map(lit): _*)))
-        .withColumn("node", col("start"))
-        .localCheckpoint(true)
-      var acc = cur.withColumn("step", lit(0))
-        .select(col("start"), col("walk"), col("step"), col("node"))
-      // the salt must multiply the PER-CANDIDATE term (added as a constant
-      // it shifts every candidate equally and the argmin never changes),
-      // and that multiplier must be large enough that one candidate step
-      // crosses a mod boundary — otherwise the argmin degenerates to
-      // "smallest neighbor" for every seed. Products are double-modded so
-      // arbitrary int64 node ids cannot overflow: (id % P)·(m % P) ≤ (P-1)²
-      // < 2⁶³, identical arithmetic on the DuckDB side.
-      val P = 2147483647L
-      val dstMult = (2654435761L +
-        java.lang.Math.floorMod(seed, 65536L) * 32452843L) % P
+      var cur = walkStarts(sym, walksPerNode).localCheckpoint(true)
+      var acc = stepRows(cur, 0)
       for (t <- 1 to length) {
-        val h = ((col("start") % P) * lit(1103515245L) % P +
-          col("walk") * lit(12345L) + lit(t.toLong) * lit(97003L) +
-          (sym("dst") % P) * lit(dstMult) % P) % P
+        val h = walkHash(seed, t, sym("dst"))
         cur = cur.join(sym, cur("node") === sym("src"))
           .groupBy(col("start"), col("walk"))
           .agg(min(struct(h.as("h"), sym("dst").as("d"))).as("m"))
           .select(col("start"), col("walk"), col("m.d").as("node"))
           .localCheckpoint(true)
-        acc = acc.unionByName(cur.withColumn("step", lit(t))
-          .select(col("start"), col("walk"), col("step"), col("node")))
+        acc = acc.unionByName(stepRows(cur, t))
       }
       acc
     }
+  }
+
+  /** The walks' start rows (start, walk, node = start): `walksPerNode`
+    * walks from every node of the symmetric edge list `sym`. */
+  private def walkStarts(sym: DataFrame, walksPerNode: Int): DataFrame =
+    sym.select(col("src").as("start")).distinct()
+      .withColumn("walk", explode(array((0 until walksPerNode).map(lit): _*)))
+      .withColumn("node", col("start"))
+
+  /** The walks' output rows (start, walk, step, node) of step `t`. */
+  private def stepRows(cur: DataFrame, t: Int): DataFrame =
+    cur.select(col("start"), col("walk"), lit(t).as("step"), col("node"))
+
+  /** The portable LCG priority of candidate `dst` at step `t` of walk
+    * (start, walk), salted by `seed`. The salt must multiply the
+    * PER-CANDIDATE term (added as a constant it shifts every candidate
+    * equally and the argmin never changes), and that multiplier must be
+    * large enough that one candidate step crosses a mod boundary —
+    * otherwise the argmin degenerates to "smallest neighbor" for every
+    * seed. Products are double-modded so arbitrary int64 node ids cannot
+    * overflow: (id % P)·(m % P) ≤ (P-1)² < 2⁶³, identical arithmetic on
+    * the DuckDB side. */
+  private def walkHash(seed: Long, t: Int, dst: Column): Column = {
+    val P = 2147483647L
+    val dstMult = (2654435761L +
+      java.lang.Math.floorMod(seed, 65536L) * 32452843L) % P
+    ((col("start") % P) * lit(1103515245L) % P +
+      col("walk") * lit(12345L) + lit(t.toLong) * lit(97003L) +
+      (dst % P) * lit(dstMult) % P) % P
   }
 
   /** Bounded EARLIEST-ARRIVAL reachability over a TEMPORAL edge list —
@@ -1100,15 +1129,11 @@ object GraphOps {
     * reached, and when?" — NOT plain reachability (a path through a
     * too-early edge does not count).
     *
-    * Synchronous relaxation, CHANGED-FRONTIER pruned like
-    * [[ssspBounded]]: each round relaxes only edges out of nodes whose
-    * arrival improved last round (an unchanged node's relaxations were
-    * already applied — arrivals never increase), min-merged full-outer
-    * with the settled table, short-circuiting when a round improves
-    * nothing. Each round is one equi-join on the src-partitioned temporal
-    * edge table + one map-side-combinable min — the khop/Bellman-Ford
-    * shape with the time-window predicate added, so the 10⁹-edge cost
-    * profile is identical to [[ssspBounded]].
+    * Synchronous relaxation, CHANGED-FRONTIER pruned: [[relaxMin]], the
+    * loop of [[ssspBounded]], with an edge (u, v, t) offering v the
+    * arrival t when t ≥ arrival(u) and nothing otherwise — the
+    * Bellman-Ford shape with the time-window predicate added, so the
+    * 10⁹-edge cost profile is identical to [[ssspBounded]].
     *
     * @param tEdges (src, dst, t) directed temporal edges, integer times;
     *               pass both directions for undirected contact graphs.
@@ -1120,29 +1145,9 @@ object GraphOps {
                       startTime: Long = 0L): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     withAdjacency(tEdges.select(col("src"), col("dst"), col("t"))) { e =>
-      var settled = seeds.select(col("node")).distinct()
-        .withColumn("arrival", lit(startTime)).localCheckpoint(true)
-      var frontier = settled
-      var r = 0
-      while (r < rounds && !frontier.isEmpty) {
-        r += 1
-        val relaxed = e.join(frontier, e("src") === frontier("node"))
-          .filter(col("t") >= col("arrival"))
-          .groupBy(e("dst").as("node"))
-          .agg(min(col("t")).as("cand"))
-        val merged = settled.join(relaxed, Seq("node"), "full_outer")
-          .select(col("node"),
-            least(coalesce(col("arrival"), col("cand")),
-              coalesce(col("cand"), col("arrival"))).as("arrival"),
-            (col("cand").isNotNull &&
-              (col("arrival").isNull || col("cand") < col("arrival")))
-              .as("improved"))
-          .localCheckpoint(true)
-        frontier = merged.filter(col("improved"))
-          .select(col("node"), col("arrival"))
-        settled = merged.select(col("node"), col("arrival"))
-      }
-      settled
+      relaxMin(e, seeds.select(col("node")).distinct()
+          .withColumn("arrival", lit(startTime)), rounds)(
+        when(col("t") >= col("arrival"), col("t")))
     }
   }
 
@@ -1176,20 +1181,12 @@ object GraphOps {
       // adjacency probe side: marker rows for the (prev, dst) test
       val adj = sym.select(col("src").as("p_src"), col("dst").as("p_dst"))
         .withColumn("is_adj", lit(1))
-      var cur = sym.select(col("src").as("start")).distinct()
-        .withColumn("walk", explode(array((0 until walksPerNode).map(lit): _*)))
-        .withColumn("node", col("start"))
+      var cur = walkStarts(sym, walksPerNode)
         .withColumn("prev", lit(null).cast(sym.schema("src").dataType))
         .localCheckpoint(true)
-      var acc = cur.withColumn("step", lit(0))
-        .select(col("start"), col("walk"), col("step"), col("node"))
-      val P = 2147483647L
-      val dstMult = (2654435761L +
-        java.lang.Math.floorMod(seed, 65536L) * 32452843L) % P
+      var acc = stepRows(cur, 0)
       for (t <- 1 to length) {
-        val h = ((col("start") % P) * lit(1103515245L) % P +
-          col("walk") * lit(12345L) + lit(t.toLong) * lit(97003L) +
-          (sym("dst") % P) * lit(dstMult) % P) % P
+        val h = walkHash(seed, t, sym("dst"))
         val w = when(col("prev").isNull, lit(1000L))
           .when(sym("dst") === col("prev"), lit(retPermille))
           .when(col("is_adj").isNotNull, lit(inPermille))
@@ -1207,8 +1204,7 @@ object GraphOps {
           .select(col("start"), col("walk"), col("m.d").as("node"),
             col("m.c").as("prev"))
           .localCheckpoint(true)
-        acc = acc.unionByName(cur.withColumn("step", lit(t))
-          .select(col("start"), col("walk"), col("step"), col("node")))
+        acc = acc.unionByName(stepRows(cur, t))
       }
       acc
     }
@@ -1220,17 +1216,17 @@ object GraphOps {
     * connected by a directed path of ≤ `maxDepth` hops, labeled with its
     * shortest hop count.
     *
-    * Evaluation is SEMI-NAIVE (the classic datalog optimization): each
-    * round extends only the LAST round's new pairs by one edge and
-    * anti-joins the settled set, so a pair reachable along many paths is
-    * expanded exactly once — the naive fixpoint re-derives every pair
-    * every round and explodes on dense graphs. Rounds are ≤ maxDepth and
-    * the loop short-circuits when a frontier comes back empty (a DAG
-    * closes in diameter rounds regardless of the cap). The edge table is
-    * hash-partitioned on src once and persisted; each round is one
-    * frontier equi-join + one anti-join, both on that partitioning;
-    * localCheckpoint per round keeps the plan O(1) deep. Cycles are safe:
-    * a pair rediscovered around a loop is dropped by the anti-join.
+    * Evaluation is SEMI-NAIVE (the classic datalog optimization):
+    * [[frontierBfs]] keyed on the origin `src`, started from the edges
+    * themselves at hop 1, extends only the LAST round's new pairs by one
+    * edge and anti-joins the settled set, so a pair reachable along many
+    * paths is expanded exactly once — the naive fixpoint re-derives every
+    * pair every round and explodes on dense graphs. Rounds are ≤ maxDepth
+    * and the loop short-circuits when a frontier comes back empty (a DAG
+    * closes in diameter rounds regardless of the cap). Cycles are safe: a
+    * pair rediscovered around a loop is dropped by the anti-join, and as
+    * no hop-0 (src, src) row is settled, a cycle back to its origin is
+    * still reported.
     *
     * The DuckDB oracle is the NAIVE recursive CTE (UNION-dedup on
     * (src, dst, d), depth-capped) aggregated to min(d) — the hash match
@@ -1243,20 +1239,9 @@ object GraphOps {
   def transitiveClosure(edges: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     withAdjacency(edges.select(col("src"), col("dst")).distinct()) { e =>
-      var settled = e.withColumn("dist", lit(1)).localCheckpoint(true)
-      var frontier = settled
-      var d = 1
-      while (d < maxDepth && !frontier.isEmpty) {
-        d += 1
-        frontier = frontier.select(col("src"), col("dst").as("mid"))
-          .join(e.select(col("src").as("mid"), col("dst")), "mid")
-          .select(col("src"), col("dst")).distinct()
-          .join(settled, Seq("src", "dst"), "left_anti")
-          .withColumn("dist", lit(d))
-          .localCheckpoint(true)
-        settled = settled.unionByName(frontier)
-      }
-      settled
+      frontierBfs(e, e.select(col("src"), col("dst").as("node"), lit(1).as("dist")),
+          Seq("src"), 2 to maxDepth)._1
+        .select(col("src"), col("node").as("dst"), col("dist"))
     }
   }
 

@@ -37,15 +37,22 @@ object GraphMaterializer {
 
   private def lineagePath(table: String) = s"$table/_lineage"
 
-  /** A table's lineage rows. Only a missing (or, by the explicit schema,
-    * a crashed first append's `_temporary`-only) lineage reads as empty;
-    * a corrupt or unreadable one fails, never reads as "nothing done". */
+  /** A table's lineage rows, read from its part files: Spark's path
+    * filter hides the `_`-prefixed lineage directory itself (and warns on
+    * every read of it), so its visible files are listed here. Only a
+    * missing lineage, or one holding only a crashed first append's
+    * `_temporary`, reads as empty; a corrupt or unreadable one fails,
+    * never reads as "nothing done". */
   private def readLineage(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val p = new Path(lineagePath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(Encoders.product[LineageRow].schema).parquet(p.toString)
+    val parts = if (!fs.exists(p)) Seq.empty[String]
+      else fs.listStatus(p).toSeq.map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .map(_.toString)
+    if (parts.nonEmpty)
+      spark.read.schema(Encoders.product[LineageRow].schema).parquet(parts: _*)
     else Seq.empty[LineageRow].toDF()
   }
 

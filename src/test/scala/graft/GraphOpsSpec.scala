@@ -887,6 +887,34 @@ class GraphOpsSpec extends AnyFunSuite {
       assert(runWl(edges, r) == refWl(edges, r), s"round $r diverged")
   }
 
+  test("each folded graph operator runs a pinned number of Spark jobs on a " +
+    "fixed seeded graph") {
+    // one probe/pin/checkpoint policy per kernel (frontierBfs, relaxMin,
+    // triangles): a per-caller drift in it shows as a changed job count
+    import org.apache.spark.JobProbe
+    val e = (0 until 80).map { i =>
+      val a = (i * 2654435761L) % 19
+      val b = (i * 40503L + 7) % 19
+      (a, if (a == b) (b + 1) % 19 else b)
+    }.distinct.toDF("src", "dst")
+    val seeds = Seq(0L, 3L, 6L).toDF("node")
+    val w = e.withColumn("w", (col("src") + col("dst")) % 5 + 1)
+    val t = e.withColumn("t", (col("src") * 7 + col("dst")) % 11)
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "khop" -> (() => GraphOps.khopDistances(e, seeds, maxHops = 3)),
+      "perSeed" -> (() => GraphOps.perSeedDistances(e, seeds, maxHops = 3)),
+      "closure" -> (() => GraphOps.transitiveClosure(e, maxDepth = 4)),
+      "betweenness" -> (() => GraphOps.betweenness(e, seeds, maxHops = 3)),
+      "sssp" -> (() => GraphOps.ssspBounded(w, seeds, rounds = 4)),
+      "earliestArrival" -> (() => GraphOps.earliestArrival(t, seeds, rounds = 4)),
+      "truss" -> (() => GraphOps.kTrussPeel(e, k = 4, rounds = 3)))
+    val jobs = ops.map { case (name, op) =>
+      name -> JobProbe.jobs(spark.sparkContext)(op().collect())._2
+    }
+    assert(jobs == Seq("khop" -> 18, "perSeed" -> 20, "closure" -> 17,
+      "betweenness" -> 41, "sssp" -> 21, "earliestArrival" -> 17, "truss" -> 15))
+  }
+
   test("modularity: two triangles + bridge — known Q, and floor on negatives") {
     val tri2 = Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))

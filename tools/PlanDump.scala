@@ -1,5 +1,6 @@
 package graft
 
+import graft.graph.GraphOps
 import graft.operators.Dedup
 import org.apache.spark.sql.functions.col
 
@@ -17,7 +18,12 @@ import java.nio.file.{Files, Paths}
   *    `simhashCandidatesPortable`), uncached (no vocabulary key);
   *  - the lazy KG pipeline (`KgPipeline.run` with `persistPass = false`,
   *    the graded headline's path) through `Queries.kgPipelineTriples` and
-  *    `Queries.kgNodes`.
+  *    `Queries.kgNodes`;
+  *  - the graph operators on the user graph: `GraphOps.triangleCounts`
+  *    and `GraphOps.neighborJaccard` over `userGraphEdges`, and the
+  *    catalog's `Queries.userGraphStats` and `Queries.userLinkPredict`
+  *    (triangleCounts and userGraphStats checkpoint their oriented edge
+  *    table while being built, so their plans read that checkpoint).
   * Compiled into the test classpath by
   * `tools/plan_diff.sh`, which runs it on two checkouts and diffs the
   * id-normalized output.
@@ -42,7 +48,13 @@ object PlanDump {
       "simhashCandidates" -> (() => Dedup.simhashCandidates(docs)),
       "simhashCandidatesPortable" -> (() => Dedup.simhashCandidatesPortable(docs)),
       "kgPipelineTriples" -> (() => Queries.kgPipelineTriples(spark, sfDir)),
-      "kgNodes" -> (() => Queries.kgNodes(spark, sfDir)))
+      "kgNodes" -> (() => Queries.kgNodes(spark, sfDir)),
+      "triangleCounts" ->
+        (() => GraphOps.triangleCounts(Queries.userGraphEdges(spark, sfDir))),
+      "neighborJaccard" -> (() => GraphOps.neighborJaccard(
+        Queries.userGraphEdges(spark, sfDir), minPermille = 200)),
+      "userGraphStats" -> (() => Queries.userGraphStats(spark, sfDir)),
+      "userLinkPredict" -> (() => Queries.userLinkPredict(spark, sfDir)))
     val buf = new ByteArrayOutputStream()
     val out = new PrintStream(buf, true, "UTF-8")
     for ((name, df) <- builders) {

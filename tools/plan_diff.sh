@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Plan-identity check for a refactor of the lazy builders listed in
 # tools/PlanDump.scala (the user-graph edge builders, the Dedup near-dup
-# operators and the lazy KG pipeline): dumps their formatted physical plans
+# operators, the lazy KG pipeline and four graph operators on the user
+# graph): dumps their formatted physical plans
 # in a base checkout and in a changed one, normalizes expression, plan and
 # RDD ids, and diffs. Exit status 0 and no diff output means the plans are
 # identical.
