@@ -6,6 +6,9 @@ import graft.score.LexiconScorer
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
+import java.util.concurrent.atomic.AtomicInteger
+
 /** Production job entry point (spark-submit shape):
   *
   *   spark-submit --class graft.RunJob engine.jar \
@@ -22,6 +25,15 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * buckets; another nBuckets is refused):
   *   <outDir>/triples   <outDir>/nodes   <outDir>/triggers
   *   <outDir>/quarantine (plain)  and prints one metrics JSON line.
+  *
+  * The four writes run side by side as jobs on one SparkContext, each
+  * from its own thread of a 4-thread pool (`runjob-write-<n>`); only the
+  * triggers write waits, for the end of the triples write, which fills the
+  * positives cache both read. Each table's lineage still follows its own
+  * data commit, so each keeps the resume contract above. The job waits for
+  * all four; if any failed, it then throws the first failure (in the order
+  * triples, nodes, triggers, quarantine) with the others attached as
+  * suppressed, and a re-run writes only what is missing.
   */
 object RunJob {
 
@@ -48,23 +60,50 @@ object RunJob {
     // read; the node pass stays a lazy scan of its own
     val out = KgPipeline.run(docs, dict, edges, LexiconScorer.default,
       persistPass = true)
-    val wroteTriples = GraphMaterializer.write(spark, out.triples.toDF(), s"$outDir/triples", nBuckets)
-    val wroteNodes = GraphMaterializer.write(spark, out.nodes, s"$outDir/nodes", nBuckets, key = "node_id")
-    val wroteTriggers = GraphMaterializer.write(spark, out.triggers.toDF(), s"$outDir/triggers", nBuckets)
-    // the quarantine count rides on its own write: no second validation pass
     val quarantined = Observation("quarantine")
-    out.quarantine.observe(quarantined, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$outDir/quarantine")
+    val threads = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"runjob-write-${threads.incrementAndGet()}"))
+    try {
+      def submit[T](write: => T): Future[T] = pool.submit(new Callable[T] {
+        def call(): T = write
+      })
+      val triples = submit(GraphMaterializer.write(spark, out.triples.toDF(), s"$outDir/triples", nBuckets))
+      val nodes = submit(GraphMaterializer.write(spark, out.nodes, s"$outDir/nodes", nBuckets, key = "node_id"))
+      // the triggers read the positives the triples write caches: started
+      // before that cache is filled, their write would run a second job to
+      // fill it, so it starts once the triples write has ended (either way)
+      val triggers = submit {
+        try triples.get() catch { case _: ExecutionException => }
+        GraphMaterializer.write(spark, out.triggers.toDF(), s"$outDir/triggers", nBuckets)
+      }
+      // the quarantine count rides on its own write: no second validation pass
+      val quarantine = submit(out.quarantine.observe(quarantined, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$outDir/quarantine"))
+      awaitAll(Seq(triples, nodes, triggers, quarantine))
 
-    // counts as each write left them: no table or lineage is re-read
-    Map(
-      "triples" -> wroteTriples.rows,
-      "nodes" -> wroteNodes.rows,
-      "triggers" -> wroteTriggers.rows,
-      "quarantined" -> quarantined.get("n").asInstanceOf[Long],
-      "buckets_written_triples" -> wroteTriples.buckets,
-      "buckets_written_nodes" -> wroteNodes.buckets,
-      "buckets_written_triggers" -> wroteTriggers.buckets)
+      // counts as each write left them: no table or lineage is re-read
+      Map(
+        "triples" -> triples.get.rows,
+        "nodes" -> nodes.get.rows,
+        "triggers" -> triggers.get.rows,
+        "quarantined" -> quarantined.get("n").asInstanceOf[Long],
+        "buckets_written_triples" -> triples.get.buckets,
+        "buckets_written_nodes" -> nodes.get.buckets,
+        "buckets_written_triggers" -> triggers.get.buckets)
+    } finally pool.shutdown()
+  }
+
+  /** Waits for every write. If any failed, throws the first failure (in
+    * the order given) with the others attached as suppressed. */
+  private def awaitAll(writes: Seq[Future[_]]): Unit = {
+    val failures = writes.flatMap { w =>
+      try { w.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -911,8 +911,10 @@ class GraphOpsSpec extends AnyFunSuite {
     val jobs = ops.map { case (name, op) =>
       name -> JobProbe.jobs(spark.sparkContext)(op().collect())._2
     }
+    // betweenness pins its backward join to a sort-merge join: 39 in
+    // every run, where AQE's runtime broadcast choice read 41 or 42
     assert(jobs == Seq("khop" -> 18, "perSeed" -> 20, "closure" -> 17,
-      "betweenness" -> 41, "sssp" -> 21, "earliestArrival" -> 17, "truss" -> 15))
+      "betweenness" -> 39, "sssp" -> 21, "earliestArrival" -> 17, "truss" -> 15))
   }
 
   test("modularity: two triangles + bridge — known Q, and floor on negatives") {

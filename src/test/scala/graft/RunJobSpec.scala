@@ -70,6 +70,47 @@ class RunJobSpec extends AnyFunSuite {
     assert(clean("triples") == digests(s"$tmp/clean")("triples")._1)
   }
 
+  test("RunJob: one failing concurrent write fails the job; the others commit and the re-run writes only it") {
+    import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+    import materialize.GraphMaterializer.{lineageRowCount, readTable}
+    val tmp = Files.createTempDirectory("graft_write_fail").toString
+    val p = core.CorpusGen.Params(nDocs = 150)
+    core.CorpusGen.generate(spark, p).map(_.doc).repartition(4).write.parquet(s"$tmp/docs")
+    def job(out: String) = RunJob.run(spark, s"$tmp/docs", s"synthetic:${p.nEntities}", out, 8)
+    def digests(out: String) = Seq("triples", "nodes", "triggers").map { t =>
+      val df = readTable(spark, s"$out/$t")
+      val r = df.agg(count(lit(1)), sum(xxhash64(df.columns.sorted.map(col).toIndexedSeq: _*)
+        .cast("decimal(38,0)"))).head()
+      t -> (r.getLong(0), r.getDecimal(1))
+    }.toMap
+    val clean = job(s"$tmp/clean")
+
+    // a regular file where the nodes table goes: its write cannot start
+    val out = s"$tmp/out"
+    val obstacle = java.nio.file.Paths.get(out, "nodes")
+    Files.createDirectories(obstacle.getParent)
+    Files.writeString(obstacle, "not a table")
+    val err = intercept[java.io.IOException](job(out))
+    assert(err.getMessage.contains("nodes"), err.toString)
+    assert(err.getSuppressed.isEmpty, "only the nodes write failed")
+    // the other writes finished before the job failed: each is committed,
+    // with lineage counts equal to its data
+    for (t <- Seq("triples", "triggers")) {
+      assert(lineageRowCount(spark, s"$out/$t") == readTable(spark, s"$out/$t").count(), t)
+      assert(lineageRowCount(spark, s"$out/$t") == clean(t), t)
+    }
+    assert(Files.exists(java.nio.file.Paths.get(out, "quarantine", "_SUCCESS")))
+
+    Files.delete(obstacle)
+    val resumed = job(out)
+    assert(resumed("buckets_written_nodes") == 8)
+    assert(resumed("buckets_written_triples") == 0 && resumed("buckets_written_triggers") == 0,
+      "the committed tables are not written again")
+    assert(resumed.filterNot(_._1.startsWith("buckets_")) ==
+      clean.filterNot(_._1.startsWith("buckets_")))
+    assert(digests(out) == digests(s"$tmp/clean"))
+  }
+
   test("RunJob: an absent <dict>_equiv runs uncanonicalized; a malformed one fails") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val tmp = Files.createTempDirectory("graft_equiv").toString

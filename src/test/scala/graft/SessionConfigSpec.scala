@@ -42,6 +42,11 @@ class SessionConfigSpec extends AnyFunSuite {
       untouched.conf.get("spark.sql.files.maxPartitionBytes"))
   }
 
+  test("every entry point's session writes file:// through the in-JVM chmod file system") {
+    assert(GraftSession.commonOptions("32").toMap.get("spark.hadoop.fs.file.impl")
+      .contains(classOf[graft.io.LocalChmodFileSystem].getName))
+  }
+
   test("an external master (spark-submit) is respected; local is a fallback") {
     assert(GraftSession.externalMaster.isEmpty,
       "the test JVM must not carry spark.master")
