@@ -531,12 +531,8 @@ object GraphOps {
           .groupBy(col("seed"), col("node"))
           .agg(sum(expr(s"sigma * ($scale + wdelta) div wsigma"))
             .as("contrib"))
-        // a sort-merge join by hint: left to AQE, whether a small `contrib`
-        // was broadcast at runtime depended on which query stage finished
-        // first, and with it the job count; at scale `contrib` has up to
-        // |level| rows, too many to broadcast anyway
         delta = level
-          .join(contrib.hint("merge"), Seq("seed", "node"), "left_outer")
+          .join(contrib, Seq("seed", "node"), "left_outer")
           .select(col("seed"), col("node"),
             coalesce(col("contrib"), lit(0L)).as("delta"), col("sigma"))
           .repartition(par, col("seed"), col("node"))

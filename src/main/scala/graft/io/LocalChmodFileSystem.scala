@@ -2,7 +2,6 @@ package graft.io
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
@@ -11,11 +10,12 @@ import java.nio.file.attribute.PosixFilePermission
   * Hadoop native library the stock one forks a `chmod` process for every
   * file and directory it creates (`Shell.execCommand` under the output
   * stream's constructor and `mkOneDirWithMode`); this one sets the same
-  * rwx bits through `java.nio`. With the native library, or for a sticky
-  * bit (which `java.nio` cannot set), it defers to the stock path. */
+  * rwx bits through `java.nio`, one system call with or without the
+  * native library. Only a sticky bit, which `java.nio` cannot set, takes
+  * the stock path. */
 class InJvmChmodRawFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    if (NativeIO.isAvailable || permission.getStickyBit) super.setPermission(p, permission)
+    if (permission.getStickyBit) super.setPermission(p, permission)
     else {
       val mode = permission.toShort
       val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])

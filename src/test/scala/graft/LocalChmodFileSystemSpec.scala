@@ -4,7 +4,6 @@ import graft.io.{InJvmChmodRawFileSystem, LocalChmodFileSystem}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.IOException
@@ -52,7 +51,7 @@ class LocalChmodFileSystemSpec extends AnyFunSuite {
     }
   }
 
-  test("without the native library the bits are set in the JVM; a sticky bit takes the stock path") {
+  test("the bits are set in the JVM; a sticky bit takes the stock path") {
     val dir = new Path(Files.createTempDirectory("graft_chmod_sticky").toUri)
     val engine = raw(new InJvmChmodRawFileSystem, "022")
     val sticky = new Path(dir, "sticky")
@@ -64,8 +63,7 @@ class LocalChmodFileSystemSpec extends AnyFunSuite {
     // NoSuchFileException, against the forked chmod's exit code (or the
     // native library's own error)
     val missing = new Path(dir, "missing")
-    val inJvm = intercept[IOException](engine.setPermission(missing, new FsPermission("644")))
-    if (!NativeIO.isAvailable) assert(inJvm.isInstanceOf[NoSuchFileException])
+    intercept[NoSuchFileException](engine.setPermission(missing, new FsPermission("644")))
     val viaStock = intercept[IOException](engine.setPermission(missing, new FsPermission("1755")))
     assert(!viaStock.isInstanceOf[NoSuchFileException])
   }

@@ -111,6 +111,45 @@ class RunJobSpec extends AnyFunSuite {
     assert(digests(out) == digests(s"$tmp/clean"))
   }
 
+  test("a bucketed write through the engine's file:// has the stock tree and permission bits") {
+    import materialize.GraphMaterializer.{readTable, write}
+    import java.nio.file.{Path => JPath}
+    import java.nio.file.attribute.PosixFilePermissions
+    val tmp = Files.createTempDirectory("graft_fs_write")
+    val rows = (0 until 300).map(i => (s"doc$i", i.toLong))
+    // the shared test session writes through the stock file system; this
+    // one resolves file:// to the engine's, counting its chmods. The
+    // writer's Hadoop conf carries the session's confs; without the cache
+    // switch, file:/// would resolve to the instance already cached
+    val engine = spark.newSession()
+    engine.conf.set("fs.file.impl", classOf[CountingChmodFileSystem].getName)
+    engine.conf.set("fs.file.impl.disable.cache", "true")
+    write(spark, rows.toDF("doc_id", "v"), tmp.resolve("stock").toString, 8)
+    CountingChmodFileSystem.chmods.set(0)
+    write(engine, engine.createDataFrame(rows).toDF("doc_id", "v"),
+      tmp.resolve("engine").toString, 8)
+    assert(CountingChmodFileSystem.chmods.get > 0, "the write went through the engine's chmod")
+
+    /** Each path under `root`, part-file ids dropped, with its bits. */
+    def tree(root: JPath): Seq[(String, String)] = {
+      val walk = Files.walk(root)
+      try walk.toArray.toSeq.map(_.asInstanceOf[JPath]).map { f =>
+        root.relativize(f).toString.replaceAll("part-[0-9a-f-]+(\\.c[0-9]+)?", "part") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+      }.distinct.sorted
+      finally walk.close()
+    }
+    val engineTree = tree(tmp.resolve("engine"))
+    assert(engineTree == tree(tmp.resolve("stock")))
+    assert(engineTree.exists(_._1.endsWith(".parquet.crc")) &&
+      engineTree.exists(_._1 == "_lineage/_SUCCESS"), engineTree.mkString("\n"))
+    assert(engineTree.forall { case (f, bits) =>
+      bits == (if (Files.isDirectory(tmp.resolve("engine").resolve(f))) "rwxr-xr-x" else "rw-r--r--")
+    }, engineTree.mkString("\n"))
+    assert(readTable(engine, tmp.resolve("engine").toString).as[(String, Long)].collect().sorted
+      .sameElements(rows.sorted))
+  }
+
   test("RunJob: an absent <dict>_equiv runs uncanonicalized; a malformed one fails") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val tmp = Files.createTempDirectory("graft_equiv").toString
@@ -202,4 +241,18 @@ class RunJobSpec extends AnyFunSuite {
     // the keep-list deliverable is decontamination-independent
     assert(withEval("keep_list") == base("keep_list"))
   }
+}
+
+/** The engine's `file://` with a count of its raw file system's chmods. */
+class CountingChmodFileSystem extends org.apache.hadoop.fs.LocalFileSystem(
+  new graft.io.InJvmChmodRawFileSystem {
+    override def setPermission(p: org.apache.hadoop.fs.Path,
+                               permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+      CountingChmodFileSystem.chmods.incrementAndGet()
+      super.setPermission(p, permission)
+    }
+  })
+
+object CountingChmodFileSystem {
+  val chmods = new java.util.concurrent.atomic.AtomicInteger
 }

@@ -21,6 +21,9 @@ class SessionConfigSpec extends AnyFunSuite {
     // AQE stays on in production — runtime coalesce + skew-join handling
     assert(GraftSession.commonOptions("32").toMap
       .get("spark.sql.adaptive.enabled").contains("true"))
+    // every entry point's session writes file:// with the in-JVM chmod
+    assert(GraftSession.commonOptions("32").toMap.get("spark.hadoop.fs.file.impl")
+      .contains(classOf[graft.io.LocalChmodFileSystem].getName))
   }
 
   test("a live production-shaped session resolves the 128 MB split default") {
@@ -40,11 +43,6 @@ class SessionConfigSpec extends AnyFunSuite {
     GraftSession.benchOnlyOptions.foreach { case (k, v) => bench.conf.set(k, v) }
     assert(bench.conf.get("spark.sql.files.maxPartitionBytes") !=
       untouched.conf.get("spark.sql.files.maxPartitionBytes"))
-  }
-
-  test("every entry point's session writes file:// through the in-JVM chmod file system") {
-    assert(GraftSession.commonOptions("32").toMap.get("spark.hadoop.fs.file.impl")
-      .contains(classOf[graft.io.LocalChmodFileSystem].getName))
   }
 
   test("an external master (spark-submit) is respected; local is a fallback") {
