@@ -9,8 +9,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *
   *   runMain graft.BenchExtra <query1> [query2 ...] [reps=N]
   *
-  * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench. Output lines:
-  *   JOB  <query> <rep> <jobId> <sec> <nStages> <nTasks> <desc>
+  * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench. Each query runs
+  * one untimed warm-up rep before its N timed reps, so no timed rep
+  * carries the JVM's or the query's cold start. Output lines per timed rep:
+  *   JOB  <query> <rep> <jobId> <sec> <nStages> <nTasks> <desc> (jobs ≥ 0.5 s)
+  *   JOBS <query> <rep> <n> (every Spark job of the rep)
+  *   STAGE <query> <rep> <stageId> tasks= run= max= <name> (top stages)
   *   EXTRA <query> <rep> <sec> (noop-sink wall time)
   */
 object BenchExtra {
@@ -69,16 +73,8 @@ object BenchExtra {
     try Queries.stageCorpusArtifacts(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[extra] staging: $e") }
 
-    for (name <- names; rep <- 1 to reps) {
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name'"))
-      jobs.clear(); order.clear(); stages.clear()
-      spark.sparkContext.setJobDescription(s"$name rep$rep")
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.setJobDescription(null)
-      Thread.sleep(200) // let listener events drain
+    def report(name: String, rep: Int, sec: Double): Unit = {
+      println(s"JOBS $name $rep ${order.size}")
       val it = order.iterator()
       while (it.hasNext) {
         val r = jobs.get(it.next())
@@ -91,6 +87,20 @@ object BenchExtra {
       for (s <- top; if s.runMs > 200)
         println(f"STAGE $name $rep ${s.id}%4d tasks=${s.tasks}%4d run=${s.runMs / 1e3}%7.2f max=${s.maxMs / 1e3}%6.2f ${s.name.take(90)}")
       println(f"EXTRA $name $rep $sec%.3f")
+    }
+
+    // rep 0 is the untimed warm-up: it runs and is not reported
+    for (name <- names; rep <- 0 to reps) {
+      val fn = SparkEntry.queries.getOrElse(name,
+        sys.error(s"unknown query '$name'"))
+      jobs.clear(); order.clear(); stages.clear()
+      spark.sparkContext.setJobDescription(s"$name rep$rep")
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val sec = (System.nanoTime() - t0) / 1e9
+      spark.sparkContext.setJobDescription(null)
+      Thread.sleep(200) // let listener events drain
+      if (rep > 0) report(name, rep, sec)
     }
     spark.stop()
   }

@@ -183,20 +183,4 @@ object KgPipeline {
 
     Output(triples, triggers, scored, unfitted, nodes, quarantine)
   }
-
-  /** Run-level metrics table (north-rule "lineage + metrics"): one row per
-    * pipeline stage with its row count. Complements the per-bucket lineage
-    * rows GraphMaterializer writes next to the data. Materializing this
-    * frame triggers one job per stage — a diagnostic, not a hot path. */
-  def metrics(out: Output)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("scored_pairs", out.scoredAll.count()),
-      ("positive_triples", out.triples.count()),
-      ("triggers", out.triggers.count()),
-      ("unfitted_pairs", out.unfitted.count()),
-      ("nodes", out.nodes.count()),
-      ("quarantined_docs", out.quarantine.count())
-    ).toDF("stage", "n_rows")
-  }
 }

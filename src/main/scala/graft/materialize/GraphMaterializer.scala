@@ -90,8 +90,8 @@ object GraphMaterializer {
     }
   }
 
-  /** Buckets recorded ok in a table's lineage. Kept for perfbench and the
-    * tests; the writer itself reads them with the counts, in one collect. */
+  /** Buckets recorded ok in a table's lineage. Only `LineageSpec` calls
+    * it; the writer itself reads them with the counts, in one collect. */
   def completedBuckets(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     okBucketRows(spark, table).keys.toSeq.toDF("bucket")

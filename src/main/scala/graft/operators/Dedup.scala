@@ -25,9 +25,7 @@ import scala.collection.concurrent.TrieMap
   *
   * One pipeline per job — blocking → candidates → one verify tail — over
   * one hash family: the portable LCG hashes of dense token ids (see the
-  * portable section below), which the oracle reproduces bit-exactly. The
-  * only near-dup hash left on xxhash64 is the per-row simhash a stream
-  * needs.
+  * portable section below), which the oracle reproduces bit-exactly.
   *
   * Everything is `functions._` + higher-order array functions — no UDFs,
   * whole-stage-codegen friendly.
@@ -67,82 +65,12 @@ object Dedup {
     else docs.repartition(par, col("doc_id"))
   }
 
-  /** 64-bit SimHash over word features, DataFrame-staged: explode the
-    * distinct words once, hash once, then 64 conditional-sum aggregates
-    * (one shuffle on doc_id, partial sums map-side) and an OR-fold of the
-    * sign bits. The batch reference for the streaming [[withSimhash]]. */
-  def simhashes(docs: DataFrame): DataFrame = {
-    val words = spreadSmall(docs).select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("w"))
-      .select(col("doc_id"), xxhash64(col("w")).as("h"))
-    val bitSums = (0 until 64).map(i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"b$i"))
-    words.groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until 64).map(i =>
-          when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b)).as("sh"))
-  }
-
-  /** Per-ROW 64-bit SimHash — identical arithmetic to `simhashes` (same
-    * xxhash64 bit votes over the distinct-word set) but folded inside one
-    * row with higher-order functions instead of an explode+groupBy:
-    * stateless, so it runs on a STREAM (aggregations on an unwindowed
-    * stream never finalize in append mode; a per-row expression just
-    * flows). Hashes are bound once per word via a transform() before the
-    * vote fold; the vote struct and the bit combine live in separate
-    * projections so the non-cheap aggregate is never duplicated. Parity
-    * with the batch operator is spec-asserted.
-    *
-    * Null-text parity: the batch `simhashes` DROPS wordless docs (explode
-    * of a null array emits nothing), but the when/otherwise vote fold
-    * would turn a null vote struct into all-zero bits — sh = 0 — letting
-    * null-text rows enter downstream bucket state and emit bogus
-    * candidate pairs. Null text therefore yields a NULL sh here, and
-    * stream consumers filter it (nearDupCandidatesStream does), keeping
-    * the streaming candidate set equal to the batch operator's on ALL
-    * inputs. */
-  def withSimhash(df: DataFrame, textCol: String = "text",
-                  out: String = "sh"): DataFrame = {
-    val hashes = transform(array_distinct(split(col(textCol), " ")),
-      w => xxhash64(w))
-    val votes = aggregate(hashes,
-      struct((0 until 64).map(i => lit(0L).as(s"b$i")): _*),
-      (acc, h) => struct((0 until 64).map(i =>
-        (acc.getField(s"b$i") +
-          when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, 1L)
-            .otherwise(-1L)).as(s"b$i")): _*))
-    df.withColumn("graft_votes", votes)
-      .withColumn(out, when(col(textCol).isNull, lit(null).cast("long"))
-        .otherwise((0 until 64).map(i =>
-          when(col("graft_votes").getField(s"b$i") > 0, shiftleft(lit(1L), i))
-            .otherwise(lit(0L)))
-          .reduce((a, b) => a.bitwiseOR(b))))
-      .drop("graft_votes")
-  }
-
-  /** SimHash near-dup candidates: equal 16-bit blocks (4 rotations) →
-    * Hamming-verify ≤ `maxHamming` via bit_count(xor).
-    *
-    * Recall contract: 4 blocks guarantee a collision only when the two
-    * hashes differ in ≤ 3 bits (pigeonhole). `maxHamming` beyond 3 is
-    * capped — promising a recall the blocking cannot deliver would
-    * silently miss qualifying pairs. A larger bound needs more blocks
-    * (Manku et al.'s rotation scheme), which trades candidate volume for
-    * recall and is out of scope here. */
-  def simhashCandidates(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    simhashBlockCandidates(simhashes(docs), math.min(maxHamming, 3))
-
   // -------------- portable (oracle-verifiable) hash family ----------------
   // The one hash family of the batch near-dup operators. It costs ONE extra
   // distinct+rank (dense token-id assignment over the sorted distinct token
   // set) and buys cross-engine bit-exactness: every hash is integer LCG
   // arithmetic over those ids, reproducible in any SQL engine, so the
-  // DuckDB oracle verifies the candidate sets value-for-value. The xxhash64
-  // simhash above stays only where a per-row, state-free hash is required:
-  // the streaming `withSimhash` and its batch reference `simhashes`.
+  // DuckDB oracle verifies the candidate sets value-for-value.
 
   /** Prime modulus shared by every portable LCG hash. */
   val HashP = 1000003L
@@ -153,7 +81,7 @@ object Dedup {
     * wraps P on a small vocabulary, so the "permutation" is monotone in
     * tid — every min-hash picks the same token (degenerate banding) and
     * simhash parity bits go globally constant (measured: 93k candidate
-    * pairs of 500 docs, 90× the xxhash operator). Large multipliers wrap
+    * pairs of 500 docs, 90× an xxhash64 simhash). Large multipliers wrap
     * every step and behave like the random permutations the construction
     * assumes. */
   private val lcgRng = new java.util.Random(987654321L)
@@ -409,10 +337,18 @@ object Dedup {
           .reduce(_ + _).as("sh"))
   }
 
-  /** Equal-16-bit-block candidates + Hamming verify over a simhash column —
-    * the one block join of the xxhash and portable simhash candidates. */
-  private def simhashBlockCandidates(sh: DataFrame, hamming: Int): DataFrame = {
-    val blocked = sh.select(col("doc_id"), col("sh"),
+  /** Portable SimHash near-dup candidates: equal 16-bit blocks (4
+    * rotations) → Hamming-verify ≤ `maxHamming` via bit_count(xor).
+    *
+    * Recall contract: 4 blocks guarantee a collision only when the two
+    * hashes differ in ≤ 3 bits (pigeonhole). `maxHamming` beyond 3 is
+    * capped — promising a recall the blocking cannot deliver would
+    * silently miss qualifying pairs. A larger bound needs more blocks
+    * (Manku et al.'s rotation scheme), which trades candidate volume for
+    * recall and is out of scope here. */
+  def simhashCandidatesPortable(docs: DataFrame, maxHamming: Int = 3,
+                                vocabKey: Option[String] = None): DataFrame = {
+    val blocked = simhashesPortable(docs, vocabKey).select(col("doc_id"), col("sh"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("blk"),
           shiftright(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))
@@ -424,14 +360,8 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
       .distinct()
-      .filter(col("hamming") <= hamming)
+      .filter(col("hamming") <= math.min(maxHamming, 3))
   }
-
-  /** Portable SimHash near-dup candidates (same ≤3-bit recall contract as
-    * simhashCandidates — the 4-block pigeonhole bound). */
-  def simhashCandidatesPortable(docs: DataFrame, maxHamming: Int = 3,
-                                vocabKey: Option[String] = None): DataFrame =
-    simhashBlockCandidates(simhashesPortable(docs, vocabKey), math.min(maxHamming, 3))
 
   /** The corpus-level dedup DELIVERABLE: one (doc_id, keep_id) row per
     * document, where keep_id is the minimum doc id of its duplicate
@@ -602,11 +532,11 @@ object Dedup {
   }
 
   /** (id, ws) word-array projection shared by the decontamination forms. */
-  private[graft] def decontamWords(df: DataFrame, id: String): DataFrame =
+  private def decontamWords(df: DataFrame, id: String): DataFrame =
     df.select(col("doc_id").as(id), split(col("text"), " ").as("ws"))
 
   /** Distinct windows of (per-row column) length `len` over `ws` → (id, g). */
-  private[graft] def windowsAt(df: DataFrame, id: String, len: Column): DataFrame =
+  private def windowsAt(df: DataFrame, id: String, len: Column): DataFrame =
     df.filter(size(col("ws")) >= len)
       .select(col(id), explode(array_distinct(
         transform(sequence(lit(1), size(col("ws")) - len + 1),

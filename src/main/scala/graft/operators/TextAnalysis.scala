@@ -500,27 +500,4 @@ object TextAnalysis {
         col("col.term").as("term"), col("col.tf").as("tf"),
         col("col.df").as("df"), col("col.score").as("score"))
   }
-
-  /** [[classifierScore]] with an EXTERNAL weight table — the trained-
-    * weights deployment path: `weights` is (feature: Long, weight: Long)
-    * over [0, dim) hashed features, exactly the flat array a trained
-    * fastText/logistic model exports. Same plan shape as the LCG form
-    * except the weight lookup is a BROADCAST join on the feature id
-    * instead of an inline expression (the table is dim rows — a few MB at
-    * fastText's 2M buckets — so it never shuffles the token stream).
-    * Tokens whose feature has no weight row contribute nothing (a sparse
-    * model's zero weights need not be materialized). */
-  def classifierScoreWith(docs: DataFrame, weights: DataFrame, dim: Long,
-                          vocabKey: Option[String] = None): DataFrame = {
-    val t = docs.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("w"))
-    val vocab = Dedup.tokenVocabCached(t.select(col("w").as("sh")), vocabKey)
-    t.join(vocab, t("w") === vocab("sh"))
-      .withColumn("feature", col("tid") % lit(dim))
-      .join(broadcast(weights), Seq("feature"), "left")
-      .groupBy(col("doc_id"))
-      .agg(sum(coalesce(col("weight"), lit(0L))).as("logit"))
-      .select(col("doc_id"), col("logit"),
-        (col("logit") > 0L).cast("int").as("label_keep"))
-  }
 }

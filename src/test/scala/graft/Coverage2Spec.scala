@@ -1,9 +1,7 @@
 package graft
 
-import graft.core._
 import graft.eval.Evalsorel
-import graft.operators.{SimSearch, Skew}
-import graft.score.LexiconScorer
+import graft.operators.SimSearch
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,49 +37,6 @@ class Coverage2Spec extends AnyFunSuite {
     val exact = SimSearch.bruteForceTopK(emb, q, 5).collect().map(_.getLong(0)).toSeq
     assert(ivf.toSet.intersect(exact.toSet).size >= 2,
       s"IVF recall too low: ivf=$ivf exact=$exact")
-  }
-
-  test("salted join: output equals the plain join on a hot-keyed input") {
-    val hot = (0 until 2000).map(i => (if (i % 10 == 0) "HOT" else s"k$i", i))
-      .toDF("key", "payload")
-    val dim = Seq(("HOT", "hot_dim"), ("k7", "dim7")).toDF("key", "attr")
-    val plain = hot.join(dim, "key").select("key", "payload", "attr")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    val salted = Skew.saltedJoin(hot, dim, "key", salts = 8)
-      .select("key", "payload", "attr")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    assert(salted == plain)
-  }
-
-  test("salted aggregation: two-phase equals single-phase") {
-    val df = (0 until 1000).map(i => (if (i % 3 == 0) "HOT" else s"k${i % 50}", 1L))
-      .toDF("key", "v")
-    val plain = df.groupBy("key").agg(sum("v").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedAgg(df, "key", 8,
-        partial = Seq(sum("v").as("pn")), finalAgg = Seq(sum("pn").as("n")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("salted aggregation with uniqueCol: deterministic salt, duplicates spread") {
-    // duplicate-CONTENT rows in a hot group carry distinct ids, so the
-    // (key, uniqueCol) salt both reproduces across retries and spreads them
-    val df = (0 until 1200)
-      .map(i => (if (i % 2 == 0) "HOT" else s"k${i % 50}", i.toLong, 1L))
-      .toDF("key", "row_id", "v")
-    val plain = df.groupBy("key").agg(sum("v").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedAgg(df, "key", 8,
-        partial = Seq(sum("v").as("pn")), finalAgg = Seq(sum("pn").as("n")),
-        uniqueCol = Some("row_id"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-    // the hot group's 600 identical-content rows land in ALL 8 salt buckets
-    val buckets = df.filter(col("key") === "HOT")
-      .select(pmod(xxhash64(col("key"), col("row_id")), lit(8)).as("s"))
-      .distinct().count()
-    assert(buckets == 8, s"hot group used only $buckets of 8 salt buckets")
   }
 
   test("dedup keep list: transitive clusters collapse to the min doc id") {
@@ -210,44 +165,5 @@ class Coverage2Spec extends AnyFunSuite {
     assert(out(1L) == ((3L, 2L, "alpha one")))
     assert(out(2L) == ((3L, 2L, "beta two")))
     assert(out(3L) == ((2L, 0L, "gamma three\nunique line here")))
-  }
-
-  test("stateful streaming dedup: first occurrence wins across micro-batches") {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_sdedup").toString
-    def doc(id: String, text: String) = Doc(id, Seq(Span("text", text, "", 0)))
-    // two files -> two micro-batches (maxFilesPerTrigger=1 in the source)
-    Seq(doc("a1", "alpha text."), doc("a2", "beta text."))
-      .toDS().coalesce(1).write.parquet(s"$tmp/in/f1")
-    Seq(doc("b1", "alpha text."), doc("b2", "gamma text."))
-      .toDS().coalesce(1).write.parquet(s"$tmp/in/f2")
-    val schema = spark.read.parquet(s"$tmp/in/f1").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in/f*")
-      .as[Doc]
-    val deduped = graft.streaming.StreamingIngest.dedupStream(stream)
-    try spark.catalog.dropTempView("graft_sdedup_out") catch { case _: Throwable => }
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("graft_sdedup_out")
-      .option("checkpointLocation", s"$tmp/ckpt").start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.table("graft_sdedup_out").as[Doc].collect()
-    assert(out.length == 3, s"expected 3 distinct texts, got ${out.map(_.doc_id).toSeq}")
-    val texts = out.map(_.spans.head.text).toSet
-    assert(texts == Set("alpha text.", "beta text.", "gamma text."))
-  }
-
-  test("pipeline metrics table covers every stage") {
-    val p = CorpusGen.Params(nDocs = 40)
-    val gen = CorpusGen.generate(spark, p)
-    val out = KgPipeline.run(CorpusGen.docs(gen), CorpusGen.dictionary(p),
-      spark.createDataset(CorpusGen.equivEdges(p)), LexiconScorer.default)
-    val m = KgPipeline.metrics(out).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(m.keySet == Set("scored_pairs", "positive_triples", "triggers",
-      "unfitted_pairs", "nodes", "quarantined_docs"))
-    assert(m("scored_pairs") > 0 && m("positive_triples") > 0)
-    assert(m("quarantined_docs") == 0)
-    assert(m("triggers") >= m("positive_triples"), "every positive has >=1 trigger (ties may add more)")
   }
 }

@@ -176,17 +176,20 @@ class CoverageSpec extends AnyFunSuite {
     CorpusGen.generate(spark, p).map(_.doc)
       .repartition(4).write.parquet(docsDir)
     // one more file holding a malformed doc (a text span with null text):
-    // the stream must drop it as the batch path quarantines it, not fail
+    // the stream must quarantine it as the batch path does, not fail
     Seq(Doc("bad", Seq(Span("text", null, "", 0)))).toDS()
       .write.mode("append").parquet(docsDir)
 
     val dict = graft.nlp.MentionDetector.broadcastDict(spark, CorpusGen.dictionary(p))
     val canonMap = graft.canon.ConnectedComponents.canonicalizeAuto(
       spark.createDataset(CorpusGen.equivEdges(p)))
-    val stream = StreamingIngest.triples(spark, docsDir, dict,
+    val (stream, quarantine) = StreamingIngest.triples(spark, docsDir, dict,
       LexiconScorer.default, canonMap)
     val q = StreamingIngest.runAvailableNow(stream, s"$tmp/sink", s"$tmp/ckpt")
     q.awaitTermination()
+    val qq = StreamingIngest.runAvailableNow(quarantine.toDF(),
+      s"$tmp/quarantine", s"$tmp/qckpt")
+    qq.awaitTermination()
 
     val streamed = spark.read.parquet(s"$tmp/sink")
       .select("doc_id", "subj", "obj").collect()
@@ -194,7 +197,10 @@ class CoverageSpec extends AnyFunSuite {
     val batchOut = KgPipeline.run(spark.read.parquet(docsDir).as[Doc],
       CorpusGen.dictionary(p), spark.createDataset(CorpusGen.equivEdges(p)),
       LexiconScorer.default)
-    assert(batchOut.quarantine.collect().map(_.doc_id).toSeq == Seq("bad"))
+    val batchQuarantine = batchOut.quarantine.collect().toSeq
+    assert(batchQuarantine.map(_.doc_id) == Seq("bad"))
+    assert(spark.read.parquet(s"$tmp/quarantine").as[QuarantineRow].collect().toSeq ==
+      batchQuarantine, "the streamed quarantine carries the batch path's reason")
     val batch = batchOut.triples.collect()
       .map(t => (t.doc_id, t.subj, t.obj)).toSet
     assert(streamed == batch, "stream/batch parity")
@@ -202,7 +208,7 @@ class CoverageSpec extends AnyFunSuite {
 
     // exactly-once per file: re-running with the same checkpoint adds nothing
     val q2 = StreamingIngest.runAvailableNow(
-      StreamingIngest.triples(spark, docsDir, dict, LexiconScorer.default, canonMap),
+      StreamingIngest.triples(spark, docsDir, dict, LexiconScorer.default, canonMap)._1,
       s"$tmp/sink", s"$tmp/ckpt")
     q2.awaitTermination()
     assert(spark.read.parquet(s"$tmp/sink").count() == streamed.size ||

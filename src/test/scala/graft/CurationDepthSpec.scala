@@ -347,27 +347,6 @@ class CurationDepthSpec extends AnyFunSuite {
     }
   }
 
-  test("classifierScoreWith on the LCG table equals the inline form; sparse drops") {
-    import TextAnalysis.{ClsA, ClsB, ClsDim}
-    val docs = Seq((1L, "a b c a"), (2L, "d e"), (3L, "f")).toDF("doc_id", "text")
-    val w = (j: Long) => Math.floorMod(
-      Math.floorMod(ClsA * j + ClsB, Dedup.HashP), 2001L) - 1000L
-    val full = (0L until ClsDim).map(j => (j, w(j))).toDF("feature", "weight")
-    val inline = TextAnalysis.classifierScore(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val external = TextAnalysis.classifierScoreWith(docs, full, ClsDim).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(external == inline,
-      "the external weight table must reproduce the inline LCG scores")
-    // sparse table: only feature of token id 1 present ("a" -> tid 1);
-    // every other token contributes zero
-    val sparse = Seq((1L % ClsDim, 7L)).toDF("feature", "weight")
-    val sp = TextAnalysis.classifierScoreWith(docs, sparse, ClsDim).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sp(1L) == 14L, "two 'a' occurrences at weight 7")
-    assert(sp(2L) == 0L && sp(3L) == 0L)
-  }
-
   // --------------------------- exact-k sampling -----------------------------
 
   /** The LCG coin stratifiedExactK ranks by, reproduced in Scala. */

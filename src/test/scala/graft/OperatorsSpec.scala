@@ -23,7 +23,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("simhash: identical text → identical hash; near dup within hamming") {
-    val sh = Dedup.simhashes(docs)
+    val sh = Dedup.simhashesPortable(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sh(1L) == sh(2L))
     assert(java.lang.Long.bitCount(sh(1L) ^ sh(3L)) <

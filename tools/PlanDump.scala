@@ -14,7 +14,7 @@ import java.nio.file.{Files, Paths}
   *    without `spread`, `userWeightedEdges`, `userTemporalEdges`);
   *  - the near-dup operators of `Dedup` on the `documents` table
   *    (`lshVerifiedDupsPortable`, `lshVerifiedDupsPortableDelta` with every
-  *    fourth doc new, `ngramJaccardPairsPrefix`, `simhashCandidates`,
+  *    fourth doc new, `ngramJaccardPairsPrefix`,
   *    `simhashCandidatesPortable`), uncached (no vocabulary key);
   *  - the lazy KG pipeline (`KgPipeline.run` with `persistPass = false`,
   *    the graded headline's path) through `Queries.kgPipelineTriples` and
@@ -45,7 +45,6 @@ object PlanDump {
       "lshVerifiedDupsPortableDelta" -> (() => Dedup.lshVerifiedDupsPortableDelta(
         docs, docs.filter(col("doc_id") % 4 === 0).select(col("doc_id")))),
       "ngramJaccardPairsPrefix" -> (() => Dedup.ngramJaccardPairsPrefix(docs)),
-      "simhashCandidates" -> (() => Dedup.simhashCandidates(docs)),
       "simhashCandidatesPortable" -> (() => Dedup.simhashCandidatesPortable(docs)),
       "kgPipelineTriples" -> (() => Queries.kgPipelineTriples(spark, sfDir)),
       "kgNodes" -> (() => Queries.kgNodes(spark, sfDir)),
